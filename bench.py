@@ -527,13 +527,15 @@ def _scale_curve(spark, registry, names) -> dict | None:
 
     def cold() -> None:
         # Both legs measured COLD: the headline collect pass above has
-        # already warmed sf0.1's _shared subtrees and persisted
+        # already warmed sf0.1's memoized subtrees and persisted
         # materializations, which would deflate the sf0.1 leg and
         # fake a super-linear ratio (observed: llm_dedup_near 0.11 s
         # warm vs ~4 s cold).  Same discipline as PLANS.md's audit.
-        from pg_telemetry_spark.queries.llm import clear_shared_cache
+        # Forgetting the session memos first also makes the next
+        # load_table re-persist its table, as on a fresh session.
+        from pg_telemetry_spark.session import clear_session_state
 
-        clear_shared_cache()
+        clear_session_state()
         spark.catalog.clearCache()
 
     cold()

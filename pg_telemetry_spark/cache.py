@@ -6,7 +6,7 @@ table feeding both signature build and verify) cannot unpersist it
 before returning — the returned DataFrame is lazy, and the pin must
 survive until the CALLER materializes the result.  Before round 13
 those sites called ``.persist()`` bare, and in any multi-query session
-(the 314-op correctness sweep, the pytest suite, a notebook) the
+(the 317-op correctness sweep, the pytest suite, a notebook) the
 cached partitions accumulated until memory-pressure eviction.
 
 ``pin`` is the lawful replacement: it persists AND registers the frame

@@ -253,7 +253,7 @@ def _connected_components_star_impl(
         # each alternation costs one job instead of two
         nxt = _small_star(_large_star(cur)).transform(ckpt_lazy)
         cur_w = witness(nxt)
-        if cur is not und:
+        if cur is not und_view:
             cur.unpersist()
         cur = nxt
         if cur_w == prev_w:

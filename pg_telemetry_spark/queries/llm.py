@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pg_telemetry_spark.operators.minhash import near_duplicates
 from pg_telemetry_spark.operators.similarity import as_double, brute_force_topk, dot
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import app_id, default_parallelism
+from pg_telemetry_spark.session import default_parallelism, memo
 from pg_telemetry_spark.tables import load_table
 
 #: Deterministic duplicate injection: every 7th doc re-appears with a
@@ -30,46 +30,24 @@ _CORPUS_SQL = f"""
 """
 
 
-#: Session-lifetime cache for intermediates shared across the dedup
-#: family (corpus, verified pair set).  Four registered queries
-#: (llm_dedup_near / llm_dedup_cc / llm_simhash / llm_dedup_incr)
-#: derive from the same near-dup corpus, and two of them need the same
-#: verified pair set — without sharing, one correctness sweep runs the
-#: full shingle→minhash→LSH→verify pipeline four times.  Mirrors the
-#: warehouse-scale design where signatures/buckets/pairs are
-#: materialized tables written once per ingest batch, not recomputed
-#: per consumer.  Keyed on applicationId so a new session never sees
-#: another session's DataFrames.
-_SHARED: dict[tuple, DataFrame] = {}
-
-
-def _shared(spark: SparkSession, key_suffix: tuple, build) -> DataFrame:
-    key = (app_id(spark), *key_suffix)
-    df = _SHARED.get(key)
-    if df is None:
-        df = build().persist()
-        _SHARED[key] = df
-    return df
-
-
-def clear_shared_cache() -> None:
-    """Unpersist and forget every shared intermediate (test hook —
-    plan audits need the cold plan, and a persisted subtree both hides
-    scan evidence and can change the exchange count)."""
-    for df in _SHARED.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-    _SHARED.clear()
-
-
 def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     dupes = d.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"), "text"
     )
     return d.unionByName(dupes)
+
+
+# The dedup family's shared intermediates (corpus, verified pair set,
+# PPJoin doc tables) are persisted once per session through
+# ``session.memo``.  Four registered queries (llm_dedup_near /
+# llm_dedup_cc / llm_simhash / llm_dedup_incr) derive from the same
+# near-dup corpus, and two of them need the same verified pair set —
+# without sharing, one correctness sweep runs the full
+# shingle→minhash→LSH→verify pipeline four times.  Mirrors the
+# warehouse-scale design where signatures/buckets/pairs are
+# materialized tables written once per ingest batch, not recomputed
+# per consumer.
 
 
 def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,7 +72,7 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # many-split warehouse scan wouldn't need it.
         return d.unionByName(mutated).repartition(default_parallelism(spark))
 
-    return _shared(spark, ("near_dup_corpus", sf_dir), build)
+    return memo(spark, ("near_dup_corpus", sf_dir), lambda: build().persist())
 
 
 def _near_dup_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -> DataFrame:
@@ -105,12 +83,14 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) ->
     # 200-partition session every downstream consumer (emit, both CC
     # variants, the cluster join) would launch 200 near-empty tasks
     # per scan of this cache
-    return _shared(
+    return memo(
         spark,
         ("near_dup_pairs", sf_dir, threshold),
         lambda: near_duplicates(
             _near_dup_corpus(spark, sf_dir), threshold=threshold
-        ).coalesce(8),
+        )
+        .coalesce(8)
+        .persist(),
     )
 
 
@@ -157,7 +137,7 @@ def _ppjoin_docs(tokens: DataFrame) -> DataFrame:
     ONE aggregate pipeline (token df groupBy -> join -> array_sort
     over ``(df, w)`` structs), not a row_number window — one doc_id
     shuffle, and the same arrays later serve both the prefix cut and
-    the exact verify.  Tau-independent, so callers _shared-cache one
+    the exact verify.  Tau-independent, so callers persist and memoize one
     copy per (token-kind, sf_dir) and every threshold/mode reuses it —
     without the cache the plan recomputes this subtree once per join
     side."""
@@ -207,7 +187,7 @@ def _ppjoin_verified(
     prefix-filtered == naive-posting-join results on the fixture.
 
     ``docs`` is :func:`_ppjoin_docs` output (df-ranked token arrays,
-    normally _shared-cached by the caller); the prefix cut is a cheap
+    normally memoized by the caller); the prefix cut is a cheap
     ``slice`` over the ranked array, so different thresholds/modes
     share one materialization."""
     plen = (F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1).cast("int")
@@ -254,18 +234,18 @@ def _word_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _word_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _shared(
+    return memo(
         spark,
         ("ppjoin_word_docs", sf_dir),
-        lambda: _ppjoin_docs(_word_tokens(spark, sf_dir)),
+        lambda: _ppjoin_docs(_word_tokens(spark, sf_dir)).persist(),
     )
 
 
 def _shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _shared(
+    return memo(
         spark,
         ("ppjoin_shingle_docs", sf_dir),
-        lambda: _ppjoin_docs(_shingle_tokens(spark, sf_dir)),
+        lambda: _ppjoin_docs(_shingle_tokens(spark, sf_dir)).persist(),
     )
 
 

@@ -23,10 +23,9 @@ from pg_telemetry_spark.queries.llm import (
     _DUP_OFFSET,
     _near_dup_corpus,
     _near_dup_pairs,
-    _shared,
 )
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import app_id, default_parallelism
+from pg_telemetry_spark.session import default_parallelism, memo
 from pg_telemetry_spark.tables import load_table
 
 
@@ -87,7 +86,9 @@ def llm_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The explode is the expensive leg (corpus x chars-per-doc rows) and
     # feeds BOTH the profile build and the scoring join — persist so it
     # is computed once per session, not once per consumer.
-    bigrams = _shared(spark, ("langid_bigrams", sf_dir), build_bigrams)
+    bigrams = memo(
+        spark, ("langid_bigrams", sf_dir), lambda: build_bigrams().persist()
+    )
     prof_w = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("bg").asc())
     top_profile = (
         bigrams.groupBy("lang", "bg")
@@ -425,56 +426,74 @@ def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Disk locations of built base indexes, keyed by sf_dir.  Process-
-#: lifetime, NOT session-lifetime: round 9's bench revives a dead
-#: SparkContext mid-leg, and an in-memory ``.persist()`` keyed on
-#: applicationId silently vanished with the old JVM — the timed probe
-#: then rebuilt the whole O(corpus) index inside the measured region
-#: (VERDICT r9 weak #1: driver-facing 17.8 s vs measured 4.7 s).
-#: Parquet on local disk survives any number of JVM deaths and is the
-#: warehouse posture the operator claims: the index is a materialized
-#: TABLE written once at ingest, read back by every probe.
-_INCR_IDX_DIRS: dict[str, str] = {}
-
-#: (app_id, sf_dir) -> read-back DataFrames for the four index tables
-#: plus their write-time schemas.  Plan memoization only — the frames
-#: are unexecuted parquet scans (every probe still computes from
-#: disk); re-deriving them cost ~87 ms of schema inference per
-#: spark.read.parquet, x9 reads per probe build (measured r17,
-#: guide §5 — the driver is part of the system).
-_INCR_IDX_FRAMES: dict[tuple, object] = {}
-_INCR_IDX_SCHEMAS: dict[str, dict] = {}
+#: (kind, sf_dir) -> (directory, write-time schemas) of every built
+#: disk index.  Process-lifetime, NOT session-lifetime: bench revives a
+#: dead SparkContext mid-leg, and an in-memory ``.persist()`` keyed on
+#: the session vanished with the old JVM — the timed probe then rebuilt
+#: the whole O(corpus) index inside the measured region (driver-facing
+#: 17.8 s vs a measured 4.7 s probe).  Parquet on local disk survives
+#: any number of JVM deaths and is the warehouse posture the operators
+#: claim: the index is a materialized TABLE written once at ingest,
+#: read back by every probe.
+_DISK_INDEXES: dict[tuple[str, str], tuple[str, dict]] = {}
 
 
-def _incr_base_index(spark: SparkSession, sf_dir: str):
-    """Pre-built LSH index of the base corpus (shingles, signatures,
-    buckets, bucket stats), written ONCE per process as Parquet tables
-    under ``.cache/incr_idx`` and read back from disk by every probe.
-    Real systems pay index build once at ingest and amortize it over
-    every delta; benching the probe without this would re-bill the
-    O(corpus) build to each run (it dominated r1's bench at 10.2 s).
-    Disk-backed (not ``.persist()``) so a SparkContext revival can
-    never fold the build back into a timed probe."""
+def _disk_index(spark: SparkSession, kind: str, sf_dir: str, build) -> tuple:
+    """Read-back frames of the ``kind`` index of ``sf_dir``, in the
+    order of ``build()``'s ``{table name: DataFrame}``.
+
+    The first call per process writes every table of ``build()`` as
+    Parquet under ``.cache/<kind>_idx`` (removed at exit).  The frames
+    read the tables back with their WRITE-TIME schemas — exact by
+    construction, and no footer inference (measured ~87 ms per
+    ``spark.read.parquet``, x9 reads per probe build) — and are
+    memoized per session: plan reuse only, every probe still scans
+    disk."""
     import atexit
     import hashlib
     import os
     import shutil
     import tempfile
 
-    from pg_telemetry_spark.operators.minhash import lsh_index
-
-    names = ("shingles", "signatures", "buckets", "stats")
-    base_dir = _INCR_IDX_DIRS.get(sf_dir)
-    if base_dir is None:
+    if (kind, sf_dir) not in _DISK_INDEXES:
         token = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
         root = os.path.join(
             os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
             ".cache",
-            "incr_idx",
+            f"{kind}_idx",
         )
         os.makedirs(root, exist_ok=True)
         base_dir = tempfile.mkdtemp(prefix=f"{token}_pid{os.getpid()}_", dir=root)
         atexit.register(shutil.rmtree, base_dir, ignore_errors=True)
+        schemas = {}
+        for name, df in build().items():
+            df.write.mode("overwrite").parquet(os.path.join(base_dir, name))
+            schemas[name] = df.schema
+        _DISK_INDEXES[kind, sf_dir] = (base_dir, schemas)
+    base_dir, schemas = _DISK_INDEXES[kind, sf_dir]
+    return memo(
+        spark,
+        ("disk_index", kind, sf_dir),
+        lambda: tuple(
+            spark.read.schema(schema).parquet(f"{base_dir}/{name}")
+            for name, schema in schemas.items()
+        ),
+    )
+
+
+def _incr_base_index(spark: SparkSession, sf_dir: str):
+    """Pre-built LSH index of the base corpus (shingles, signatures,
+    buckets, bucket stats) plus the landed delta batch, written ONCE
+    per process as Parquet tables (:func:`_disk_index`) and read back
+    from disk by every probe.  Real systems pay index build once at
+    ingest and amortize it over every delta; benching the probe
+    without this would re-bill the O(corpus) build to each run (it
+    once dominated the bench at 10.2 s).  Disk-backed (not
+    ``.persist()``) so a SparkContext revival can never fold the build
+    back into a timed probe."""
+    from pg_telemetry_spark.operators.minhash import lsh_index
+
+    def build() -> dict:
         # build the four tables from ONE pipeline run (shingles feed
         # signatures feed buckets feed stats — separate builds would
         # re-shingle the corpus four times); land the delta too — in
@@ -491,53 +510,12 @@ def _incr_base_index(spark: SparkSession, sf_dir: str):
         # partitions to advisoryPartitionSizeInBytes: one file at
         # fixture scale, 64 MB files at warehouse scale — the same
         # knob both ways, no local constant.
-        delta_df = corpus.filter(F.col("doc_id") >= _DUP_OFFSET)
-        schemas = {}
-        for name, df in zip(names, lsh_index(base)):
-            df.hint("rebalance").write.mode("overwrite").parquet(
-                os.path.join(base_dir, name)
-            )
-            schemas[name] = df.schema
-        delta_df.hint("rebalance").write.mode("overwrite").parquet(
-            os.path.join(base_dir, "delta")
-        )
-        schemas["delta"] = delta_df.schema
-        _INCR_IDX_SCHEMAS[base_dir] = schemas
-        _INCR_IDX_DIRS[sf_dir] = base_dir
-    # Read-back frames are memoized per (session, sf_dir) with their
-    # WRITE-TIME schemas: the explicit schema skips footer inference
-    # and is exact by construction (it is the schema the writer had).
-    from pg_telemetry_spark.session import app_id
+        names = ("shingles", "signatures", "buckets", "stats")
+        tables = dict(zip(names, lsh_index(base)))
+        tables["delta"] = corpus.filter(F.col("doc_id") >= _DUP_OFFSET)
+        return {name: df.hint("rebalance") for name, df in tables.items()}
 
-    key = (app_id(spark), sf_dir)
-    frames = _INCR_IDX_FRAMES.get(key)
-    if frames is None:
-        schemas = _INCR_IDX_SCHEMAS[base_dir]
-        frames = tuple(
-            spark.read.schema(schemas[name]).parquet(f"{base_dir}/{name}")
-            for name in names
-        )
-        _INCR_IDX_FRAMES[key] = frames
-    return frames
-
-
-def _incr_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The landed delta batch (disk table written by
-    :func:`_incr_base_index`) — read back like any ingest batch.
-    Same write-time-schema read and per-session frame memo as the
-    index tables (plan reuse only; execution always scans disk)."""
-    from pg_telemetry_spark.session import app_id
-
-    _incr_base_index(spark, sf_dir)
-    base_dir = _INCR_IDX_DIRS[sf_dir]
-    key = (app_id(spark), sf_dir, "delta")
-    df = _INCR_IDX_FRAMES.get(key)
-    if df is None:
-        df = spark.read.schema(_INCR_IDX_SCHEMAS[base_dir]["delta"]).parquet(
-            f"{base_dir}/delta"
-        )
-        _INCR_IDX_FRAMES[key] = df
-    return df
+    return _disk_index(spark, "incr", sf_dir, build)
 
 
 @query("llm_dedup_incr", group="llm_ext", tier="C")
@@ -553,8 +531,7 @@ def llm_dedup_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     The unit test proves base-pairs ∪ delta-pairs == full rebuild."""
     from pg_telemetry_spark.operators.minhash import incremental_near_duplicates
 
-    sh_idx, sg_idx, bk_idx, st_idx = _incr_base_index(spark, sf_dir)
-    delta = _incr_delta(spark, sf_dir)
+    sh_idx, sg_idx, bk_idx, st_idx, delta = _incr_base_index(spark, sf_dir)
     pairs, _sh, _sg, _bk, _st = incremental_near_duplicates(
         sh_idx, sg_idx, bk_idx, st_idx, delta, threshold=0.5
     )
@@ -591,12 +568,6 @@ def llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multitable_lsh_ann_topk(emb, probes, k=5)
 
 
-#: sf_dir -> on-disk ANN index directory (same disk-backed rationale
-#: as _INCR_IDX_DIRS: the index is a materialized TABLE written once
-#: at ingest; a probe must never re-bill the O(corpus) build).
-_ANN_IDX_DIRS: dict[str, str] = {}
-
-
 def _ann_plan_and_planes(nbits: int, tables: int):
     from pg_telemetry_spark.operators.ann import REF_BITS, _hyperplanes, _ref_hyperplanes
 
@@ -607,37 +578,20 @@ def _ann_plan_and_planes(nbits: int, tables: int):
 def _ann_base_index(spark: SparkSession, sf_dir: str):
     """Materialized multi-table LSH ANN index of the base corpus
     (embeddings with vec_id >= 10): ``index`` (tbl, bucket, sub, id),
-    ``hot`` (tbl, bucket), ``vectors`` (the exact-scoring side) and a
+    ``hot`` (tbl, bucket), ``vectors`` (the exact-scoring side), a
     1-row ``meta`` table carrying the solved (nbits, tables) so a
     probe regenerates the md5-deterministic planes WITHOUT touching
-    the corpus.  Written once per process as Parquet under
-    ``.cache/ann_idx`` — the warehouse posture multitable_lsh_ann_topk's
-    docstring promises (VERDICT r14 #2), where every query rebuilt
-    codes from scratch."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    the corpus, and the landed ``delta`` batch.  Written once per
+    process as Parquet (:func:`_disk_index`) — the warehouse posture
+    multitable_lsh_ann_topk's docstring promises, where every query
+    rebuilt codes from scratch."""
     from pg_telemetry_spark.operators.ann import (
         build_lsh_ann_index,
         estimate_neighbor_cos,
         lsh_plan,
     )
 
-    names = ("index", "hot", "vectors", "meta", "delta")
-    base_dir = _ANN_IDX_DIRS.get(sf_dir)
-    if base_dir is None:
-        token = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            ".cache",
-            "ann_idx",
-        )
-        os.makedirs(root, exist_ok=True)
-        base_dir = tempfile.mkdtemp(prefix=f"{token}_pid{os.getpid()}_", dir=root)
-        atexit.register(shutil.rmtree, base_dir, ignore_errors=True)
+    def build() -> dict:
         emb = load_table(spark, sf_dir, "embeddings")
         corpus = emb.filter(F.col("vec_id") >= 10)
         n = corpus.count()
@@ -648,35 +602,20 @@ def _ann_base_index(spark: SparkSession, sf_dir: str):
         # rebalance-on-write: same file-sizing rationale as
         # _incr_base_index (guide §6) — narrow-map outputs otherwise
         # land one KB-sized file per scan split
-        index.hint("rebalance").write.mode("overwrite").parquet(
-            os.path.join(base_dir, "index")
-        )
-        hot.hint("rebalance").write.mode("overwrite").parquet(
-            os.path.join(base_dir, "hot")
-        )
-        corpus.select("vec_id", "embedding").hint("rebalance").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base_dir, "vectors"))
-        spark.createDataFrame([(nbits, tables)], "nbits int, tables int").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base_dir, "meta"))
-        # the arriving batch is itself a landed table, not a derivation
-        emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding").hint(
-            "rebalance"
-        ).write.mode("overwrite").parquet(os.path.join(base_dir, "delta"))
-        _ANN_IDX_DIRS[sf_dir] = base_dir
-    # same per-session frame memo as _incr_base_index (plan reuse
-    # only; execution always scans the parquet tables)
-    from pg_telemetry_spark.session import app_id
+        return {
+            "index": index.hint("rebalance"),
+            "hot": hot.hint("rebalance"),
+            "vectors": corpus.select("vec_id", "embedding").hint("rebalance"),
+            "meta": spark.createDataFrame(
+                [(nbits, tables)], "nbits int, tables int"
+            ),
+            # the arriving batch is itself a landed table, not a derivation
+            "delta": emb.filter(F.col("vec_id") < 10)
+            .select("vec_id", "embedding")
+            .hint("rebalance"),
+        }
 
-    key = (app_id(spark), sf_dir, "ann")
-    frames = _INCR_IDX_FRAMES.get(key)
-    if frames is None:
-        frames = tuple(
-            spark.read.parquet(f"{base_dir}/{name}") for name in names
-        )
-        _INCR_IDX_FRAMES[key] = frames
-    return frames
+    return _disk_index(spark, "ann", sf_dir, build)
 
 
 @query("llm_ann_incr", group="llm_ext", tier="C")

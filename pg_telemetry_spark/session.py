@@ -11,8 +11,9 @@ Two entry points:
 
 Required confs and why:
 
-- ``spark.sql.legacy.parquet.nanosAsLong=true`` — the ``events``
-  fixture stores ``ts`` as Parquet TIMESTAMP(NANOS), which Spark 4
+- ``spark.sql.legacy.parquet.nanosAsLong=true`` — an ``events`` file
+  may store ``ts`` as Parquet TIMESTAMP(NANOS) (the shipped fixtures
+  are TIMESTAMP(MICROS); other writers emit NANOS), which Spark 4
   refuses by default ([PARQUET_TYPE_ILLEGAL]); with this conf it reads
   as nanosecond longs that :mod:`pg_telemetry_spark.tables` converts
   to microsecond timestamps (verified to match DuckDB exactly).
@@ -68,8 +69,68 @@ SIZING_CONFS: dict[str, tuple[str, str]] = {
 }
 
 
-#: app ids whose executors already received the package zip.
-_SHIPPED: set[str] = set()
+class SessionState:
+    """Derived state of one live session.
+
+    - ``frames``: memoized DataFrames (see :func:`memo`) — the fixture
+      table cache, the dedup family's shared intermediates, the disk
+      index read-back scans.  Bound to this session's JVM, so they die
+      with it.
+    - ``shipped``: the package zip has been added to this session's
+      executors (:func:`ship_package`).
+    - ``ckpt_dir``: the checkpoint directory last APPLIED to this
+      session's SparkContext (:func:`iter_checkpoint`).
+    """
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.spark = spark
+        self.frames: dict[tuple, object] = {}
+        self.shipped = False
+        self.ckpt_dir: str | None = None
+
+
+#: The state of the one live session.  Every process the engine runs
+#: in (the driver's sweep, bench legs, tests, tools) uses one session
+#: at a time, so a single slot suffices: it is replaced whenever a
+#: different session object arrives, and a stopped session's frames
+#: are already gone with its JVM.
+_STATE: SessionState | None = None
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """The state of ``spark``, made fresh when ``spark`` is not the
+    session the slot was made for (Python identity — no py4j call, and
+    the same on classic and Spark Connect sessions)."""
+    global _STATE
+    if _STATE is None or _STATE.spark is not spark:
+        _STATE = SessionState(spark)
+    return _STATE
+
+
+def memo(spark: SparkSession, key: tuple, build):
+    """``build()``'s result (a DataFrame or a tuple of them), computed
+    once per live session and ``key``.  Callers that want the data
+    kept persist inside ``build``; an unpersisted value is plan reuse
+    only and recomputes on every action."""
+    frames = session_state(spark).frames
+    if key not in frames:
+        frames[key] = build()
+    return frames[key]
+
+
+def clear_session_state() -> None:
+    """Unpersist and forget every memoized frame (plan audits need the
+    cold plans; benches need cold legs).  Unpersisting a frame that was
+    never persisted does nothing."""
+    if _STATE is None:
+        return
+    for value in _STATE.frames.values():
+        for df in value if isinstance(value, tuple) else (value,):
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # session already stopped
+    _STATE.frames.clear()
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -99,7 +160,8 @@ def ship_package(spark: SparkSession) -> None:
         master = spark.sparkContext.master
     except Exception:
         return  # Spark Connect — no classic sparkContext
-    if master.startswith("local[") or app_id(spark) in _SHIPPED:
+    state = session_state(spark)
+    if master.startswith("local[") or state.shipped:
         return
     import tempfile
     import zipfile
@@ -118,7 +180,7 @@ def ship_package(spark: SparkSession) -> None:
                 z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
     os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
-    _SHIPPED.add(app_id(spark))
+    state.shipped = True
 
 
 def prepare_session(spark: SparkSession) -> SparkSession:
@@ -141,23 +203,6 @@ def prepare_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass
     return spark
-
-
-def app_id(spark: SparkSession) -> str:
-    """Session identity for cache keys.
-
-    ``sparkContext.applicationId`` on classic sessions; Spark Connect
-    sessions have no ``sparkContext``, so fall back to the
-    ``spark.app.id`` conf (same value on classic) and finally a
-    constant — a Connect client talks to one app anyway.
-    """
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:
-        try:
-            return spark.conf.get("spark.app.id")
-        except Exception:
-            return "spark-connect"
 
 
 def default_parallelism(spark: SparkSession) -> int:
@@ -313,17 +358,6 @@ def sized_shuffle(
             spark.conf.set(akey, old_adaptive)
 
 
-#: app id -> LAST-APPLIED checkpoint dir.  A dict (not a set of
-#: (app, dir) pairs) because the comparison must be against what the
-#: SparkContext currently has: with a set, an A->B->A revisit of
-#: PG_TELEMETRY_SPARK_CHECKPOINT_DIR finds (app, A) already present,
-#: skips setCheckpointDir, and silently routes checkpoints into B —
-#: the exact misrouting the per-dir keying was meant to fix (ADVICE
-#: r14).  setCheckpointDir is called whenever the requested dir
-#: differs from the last one actually applied.
-_CKPT_DIR_LAST: dict[str, str] = {}
-
-
 def iter_checkpoint(df, eager: bool = True):
     """Lineage truncation for iterative operators (PageRank rounds,
     label propagation, BFS frontiers, BPE merges, CC star rounds,
@@ -343,11 +377,12 @@ def iter_checkpoint(df, eager: bool = True):
     d = os.environ.get("PG_TELEMETRY_SPARK_CHECKPOINT_DIR")
     if not d:
         return df.localCheckpoint(eager=eager)
-    spark = df.sparkSession
-    app = app_id(spark)
-    if _CKPT_DIR_LAST.get(app) != d:
-        spark.sparkContext.setCheckpointDir(d)
-        _CKPT_DIR_LAST[app] = d
+    # Compare against the dir last APPLIED to this SparkContext, not a
+    # set of dirs seen: an A->B->A revisit must re-apply A.
+    state = session_state(df.sparkSession)
+    if state.ckpt_dir != d:
+        df.sparkSession.sparkContext.setCheckpointDir(d)
+        state.ckpt_dir = d
     if eager:
         # Reliable checkpoint writes its files in a SEPARATE job after
         # the materializing action, so an unpersisted lineage is

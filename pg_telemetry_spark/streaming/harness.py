@@ -26,6 +26,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+def _env_stream_shuffle() -> int:
+    raw = os.environ.get("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "4")
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"PG_TELEMETRY_SPARK_STREAM_SHUFFLE must be an integer, got {raw!r}"
+        ) from None
+
+
 @dataclass
 class FileStreamHarness:
     spark: SparkSession
@@ -49,11 +59,7 @@ class FileStreamHarness:
     #: was mixed (only the stream-stream join kept improving) and
     #: halves state parallelism for no suite-level gain.  Results are
     #: partition-count-independent (batch equivalence tests pin them).
-    shuffle_partitions: int = field(
-        default_factory=lambda: int(
-            os.environ.get("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "4")
-        )
-    )
+    shuffle_partitions: int = field(default_factory=_env_stream_shuffle)
     #: State-store backend.  RocksDB (bundled rocksdbjni) is the scale
     #: story for stateful streaming — the default HDFS-backed provider
     #: holds every key in executor heap, so 100 TB of keyed state OOMs,

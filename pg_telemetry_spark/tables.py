@@ -9,7 +9,8 @@ pruned columns, and no inference job runs at 100 TB).
 TIMESTAMP(MICROS), TIMESTAMP(MILLIS), TIMESTAMP(NANOS), or INT96
 depending on the writer, and the fixture generator has shipped both
 NANOS (rounds 1-3) and MICROS (round 4+).  The loader inspects the
-parquet footer once per path (driver-side, cached) and branches:
+parquet footer each time it reads the file (driver-side, a fraction
+of a millisecond) and branches:
 
 - MICROS / MILLIS / INT96 — Spark reads the logical type natively as
   ``timestamp_ntz``; no conversion, and timestamp predicates push all
@@ -35,7 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pg_telemetry_spark.session import app_id, default_parallelism, prepare_session
+from pg_telemetry_spark.session import default_parallelism, memo, prepare_session
 
 TABLE_NAMES = (
     "region",
@@ -149,7 +150,10 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
-#: Session-lifetime table cache, keyed on (applicationId, sf_dir, name).
+#: Session-lifetime table cache: ``load_table`` memoizes each
+#: persisted table in the session state (``session.memo``) under
+#: ("table", sf_dir, name); ``session.clear_session_state`` unpersists
+#: and forgets it.
 #:
 #: The driver's correctness sweep runs 130+ registered queries against
 #: the SAME ten small fixture tables in one session — re-reading and
@@ -167,7 +171,6 @@ SCHEMAS: dict[str, T.StructType] = {
 #: Disable with PG_TELEMETRY_SPARK_NO_TABLE_CACHE=1 (plan-shape tests
 #: and tools/gen_plans.py do, so the audited plans stay the cold-path
 #: pushdown plans).
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _cache_enabled() -> bool:
@@ -217,19 +220,6 @@ def _cache_rebalance_width(spark: SparkSession, path: str) -> int:
     )
 
 
-def clear_table_cache() -> None:
-    """Unpersist and forget every cached table (test hook)."""
-    for df in _TABLE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-    _TABLE_CACHE.clear()
-    # A fixture regenerated in-process at the same path may have a
-    # different timestamp unit — forget the probed units too.
-    _TS_UNIT_CACHE.clear()
-
-
 #: Raw read schema for the TIMESTAMP(NANOS) physical variant: under
 #: spark.sql.legacy.parquet.nanosAsLong the column arrives as int64.
 _EVENTS_RAW_NANOS = T.StructType(
@@ -243,23 +233,17 @@ _EVENTS_RAW_NANOS = T.StructType(
     ]
 )
 
-#: path -> 'ns' | 'us' | 'ms' | 's' (footer inspected once per path).
-_TS_UNIT_CACHE: dict[str, str] = {}
-
-
 def events_ts_unit(path: str) -> str:
     """Timestamp unit of ``ts`` in the parquet file(s) at ``path``.
 
-    One driver-side footer read (cached) — never a Spark job.  INT96
+    One driver-side footer read per call — never a Spark job, and
+    never stale when a file is rewritten in place.  INT96
     columns (legacy Hive/Impala writers) decode through pyarrow as
     nanoseconds but Spark reads them natively as timestamps, so they
     are reported as 'us' (the native-read branch).  Directories are
     probed via their first data file — a mixed-unit directory is a
     writer bug upstream of us.
     """
-    unit = _TS_UNIT_CACHE.get(path)
-    if unit is not None:
-        return unit
     import pyarrow.parquet as pq
 
     probe = path
@@ -287,11 +271,8 @@ def events_ts_unit(path: str) -> str:
         None,
     )
     if leaf is not None and leaf.physical_type == "INT96":
-        unit = "us"  # Spark decodes INT96 natively
-    else:
-        unit = pf.schema_arrow.field(idx).type.unit
-    _TS_UNIT_CACHE[path] = unit
-    return unit
+        return "us"  # Spark decodes INT96 natively
+    return pf.schema_arrow.field(idx).type.unit
 
 
 def _read_events_raw(spark: SparkSession, path: str) -> tuple[DataFrame, str]:
@@ -319,22 +300,15 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, cache: bool | None = None
-) -> DataFrame:
-    """Load one fixture table with its explicit schema.
-
-    ``cache=None`` (default) follows the env toggle; ``cache=False``
-    forces the direct pushdown-friendly read (plan audits).
-    """
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table with its explicit schema, through the
+    session table cache unless PG_TELEMETRY_SPARK_NO_TABLE_CACHE=1
+    (then the direct pushdown-friendly read, as plan audits need)."""
     prepare_session(spark)
-    if cache is None:
-        cache = _cache_enabled()
-    if not cache:
+    if not _cache_enabled():
         return _read_table(spark, sf_dir, name)
-    key = (app_id(spark), sf_dir, name)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         df = _read_table(spark, sf_dir, name)
         if name in _REBALANCE_ON_CACHE:
             # Rebalance BEFORE persist (optimization r16, guide §2.5
@@ -355,8 +329,8 @@ def load_table(
             # llm_zipf_heaps 0.7/0.7/1.2 s) while the CPU-heavy
             # kernels saturate by 8-way at fixture volume
             # (llm_dup_substrings 2.4/1.4/1.8 s).  Cache-on is the
-            # fixture-sweep path only (see the _TABLE_CACHE note);
-            # the cold path below stays byte-identical so pushdown
+            # fixture-sweep path only (see the table-cache note);
+            # the uncached path stays byte-identical so pushdown
             # plans and their audits are untouched.  r17 (ADVICE r16
             # #2): the width is derived from the table's on-disk
             # size, so a warehouse-scale table cached through this
@@ -367,9 +341,9 @@ def load_table(
             df = df.repartition(
                 _cache_rebalance_width(spark, f"{sf_dir}/{name}.parquet")
             )
-        df = df.persist()
-        _TABLE_CACHE[key] = df
-    return df
+        return df.persist()
+
+    return memo(spark, ("table", sf_dir, name), build)
 
 
 def load_events_sliced(

@@ -17,11 +17,8 @@ from __future__ import annotations
 import pytest
 
 from pg_telemetry_spark.registry import all_queries
-from pg_telemetry_spark.tables import (
-    _cache_rebalance_width,
-    clear_table_cache,
-    load_table,
-)
+from pg_telemetry_spark.session import clear_session_state
+from pg_telemetry_spark.tables import _cache_rebalance_width, load_table
 
 _ALL = all_queries()
 
@@ -29,9 +26,9 @@ _ALL = all_queries()
 @pytest.fixture()
 def _cache_on(monkeypatch):
     monkeypatch.delenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", raising=False)
-    clear_table_cache()
+    clear_session_state()
     yield
-    clear_table_cache()
+    clear_session_state()
 
 
 def test_cache_width_is_size_derived(spark, sf_dir, _cache_on):
@@ -78,12 +75,12 @@ def test_cache_on_off_parity(name, spark, sf_dir, monkeypatch):
     if name not in _ALL:
         pytest.skip(f"{name} not registered")
     monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")
-    clear_table_cache()
+    clear_session_state()
     cold = sorted(map(tuple, _ALL[name].fn(spark, sf_dir).collect()))
     monkeypatch.delenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE")
-    clear_table_cache()
+    clear_session_state()
     try:
         warm = sorted(map(tuple, _ALL[name].fn(spark, sf_dir).collect()))
     finally:
-        clear_table_cache()
+        clear_session_state()
     assert cold == warm

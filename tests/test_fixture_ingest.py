@@ -17,7 +17,8 @@ impossible to reintroduce:
   the native domain) — the difference between reading one hour and
   scanning everything at 100 TB;
 - the footer probe (`events_ts_unit`) fails loudly, not silently, on
-  malformed inputs (no data file, no ts column).
+  malformed inputs (no data file, no ts column), and re-reads a file
+  rewritten in place.
 """
 
 from __future__ import annotations
@@ -34,8 +35,8 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
+from pg_telemetry_spark.session import clear_session_state
 from pg_telemetry_spark.tables import (
-    clear_table_cache,
     events_ts_unit,
     load_events_sliced,
     load_table,
@@ -82,10 +83,11 @@ def _plan(df) -> str:
 
 
 @pytest.mark.parametrize("sf", FIXTURE_DIRS, ids=[os.path.basename(d) for d in FIXTURE_DIRS])
-def test_ondisk_fixture_matches_duckdb(spark, sf):
+def test_ondisk_fixture_matches_duckdb(spark, sf, monkeypatch):
     """Whatever unit the generator shipped, Spark == DuckDB on the file."""
-    clear_table_cache()
-    got = _spark_profile(load_table(spark, sf, "events", cache=False))
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")
+    clear_session_state()
+    got = _spark_profile(load_table(spark, sf, "events"))
     want = _duckdb_profile(f"{sf}/events.parquet")
     assert got == want, f"{sf}: spark {got} != duckdb {want}"
     # sanity on the domain itself: a unit bug lands everything in 1970
@@ -132,12 +134,13 @@ def _write_synthetic_events(tmp_path, unit: str) -> str:
 
 
 @pytest.mark.parametrize("unit", ["ns", "us", "ms", "int96"])
-def test_synthetic_unit_roundtrip_matches_duckdb(spark, tmp_path, unit):
+def test_synthetic_unit_roundtrip_matches_duckdb(spark, tmp_path, unit, monkeypatch):
     """The loader branches correctly for every unit a writer can ship."""
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")
     sf = _write_synthetic_events(tmp_path, unit)
     probed = events_ts_unit(f"{sf}/events.parquet")
     assert probed == ("us" if unit == "int96" else unit)
-    got = _spark_profile(load_table(spark, sf, "events", cache=False))
+    got = _spark_profile(load_table(spark, sf, "events"))
     want = _duckdb_profile(f"{sf}/events.parquet")
     assert got == want, f"unit={unit}: spark {got} != duckdb {want}"
     assert got[2] == 90 and got[3] == 4  # 90 hourly rows span 4 calendar days
@@ -188,9 +191,10 @@ def test_unit_probe_errors_are_loud(tmp_path):
         events_ts_unit(str(no_ts))
 
 
-def test_unit_cache_cleared_with_table_cache(tmp_path):
-    """A fixture regenerated in-process with a different unit must be
-    re-probed after clear_table_cache() (ADVICE r5: stale-unit bug)."""
+def test_unit_probe_rereads_rewritten_file(tmp_path):
+    """A fixture regenerated in-process with a different unit is
+    re-probed on the next call: the probe keeps no cache that could
+    go stale."""
     sf = tmp_path / "regen"
     sf.mkdir()
     path = str(sf / "events.parquet")
@@ -198,6 +202,4 @@ def test_unit_cache_cleared_with_table_cache(tmp_path):
     pq.write_table(pa.table({"ts": pa.array(ts, pa.timestamp("ns"))}), path)
     assert events_ts_unit(path) == "ns"
     pq.write_table(pa.table({"ts": pa.array(ts, pa.timestamp("us"))}), path)
-    assert events_ts_unit(path) == "ns"  # cached (documented behavior)
-    clear_table_cache()
-    assert events_ts_unit(path) == "us"  # re-probed after clear
+    assert events_ts_unit(path) == "us"

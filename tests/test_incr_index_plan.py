@@ -16,6 +16,7 @@ from __future__ import annotations
 import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from pg_telemetry_spark.operators.minhash import (
     bucket_stats,
@@ -172,3 +173,28 @@ def test_kmeans_init_is_take_ordered_not_global_window(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
     assert "Window" not in plan
     assert "Exchange SinglePartition" not in plan
+
+
+@pytest.mark.parametrize("kind", ["incr", "ann"])
+def test_disk_index_frames_memoized_per_session(spark, kind):
+    """The disk-index helper's contract, for both index kinds: a second
+    call in one session returns the identical memoized read-back
+    frames; after clear_session_state() the next call returns NEW
+    frames over the SAME directory, without rebuilding the index."""
+    from pg_telemetry_spark.queries import llm_ext
+    from pg_telemetry_spark.session import clear_session_state
+
+    build = {"incr": llm_ext._incr_base_index, "ann": llm_ext._ann_base_index}[kind]
+    sf = "/root/testdata/sf0.001"
+    first = build(spark, sf)
+    entry = llm_ext._DISK_INDEXES[kind, sf]
+    assert build(spark, sf) is first
+    clear_session_state()
+    again = build(spark, sf)
+    assert again is not first
+    assert llm_ext._DISK_INDEXES[kind, sf] is entry  # not rebuilt
+    base_dir, schemas = entry
+    assert len(again) == len(schemas)
+    for df, name in zip(again, schemas):
+        files = df.inputFiles()
+        assert files and all(f"{base_dir}/{name}/" in f for f in files), files

@@ -23,7 +23,7 @@ import re
 import pytest
 
 from pg_telemetry_spark.registry import all_queries
-from pg_telemetry_spark.tables import clear_table_cache
+from pg_telemetry_spark.session import clear_session_state
 
 _ALL = all_queries()
 
@@ -38,9 +38,9 @@ def _cold_table_reads(monkeypatch):
     the raw scan plans this file's budgets were always calibrated
     against (same switch tools/gen_plans.py uses)."""
     monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")
-    clear_table_cache()
+    clear_session_state()
     yield
-    clear_table_cache()
+    clear_session_state()
 
 #: query -> max distinct Exchange nodes allowed in the physical plan.
 #: Values are the audited round-6 cold-plan counts (this file's own
@@ -114,7 +114,7 @@ BUDGETS = {
     # ONE exchange is the shuffle on cell_id feeding the per-cell
     # gram-matrix report
     "llm_semdedup": 1,
-    # PPJoin family (r7): plans root at the _shared df-ranked docs
+    # PPJoin family (r7): plans root at the memoized df-ranked docs
     # relation (same materialized-table shape as llm_dedup_cc); the
     # 3 = prefix self-join sides + candidate distinct
     "llm_containment": 3,
@@ -182,15 +182,12 @@ def test_shuffle_budget(name, spark, sf_dir):
     # audit the canonical COLD plan: persisted subtrees substitute
     # InMemoryRelations that change the exchange count (a cached
     # subtree loses the reused exchange the cold plan shares between
-    # its consumers).  Clearing the two engine caches is not enough —
-    # operators like near_duplicates persist internal intermediates
-    # that outlive their call in the session CacheManager and get
-    # substituted into LATER identical subtrees — so nuke the
-    # CacheManager itself.
-    from pg_telemetry_spark.queries.llm import clear_shared_cache
-
-    clear_table_cache()
-    clear_shared_cache()
+    # its consumers).  Clearing the engine's session state is not
+    # enough — operators like near_duplicates persist internal
+    # intermediates that outlive their call in the session
+    # CacheManager and get substituted into LATER identical subtrees —
+    # so nuke the CacheManager itself.
+    clear_session_state()
     spark.catalog.clearCache()
     n = _exchanges(_ALL[name].fn(spark, sf_dir))
     assert n <= BUDGETS[name], (

@@ -43,9 +43,9 @@ def test_filter_pushed_to_parquet_scan(spark, sf_dir):
     # Same cold-path discipline as test_column_pruning_in_read_schema:
     # a cached events table from an earlier test would be substituted
     # for the scan by the CacheManager, hiding PushedFilters.
-    from pg_telemetry_spark.tables import clear_table_cache
+    from pg_telemetry_spark.session import clear_session_state
 
-    clear_table_cache()
+    clear_session_state()
     df = _Q["filt_ts_range"].fn(spark, sf_dir)
     plan = _formatted(df)
     assert "PushedFilters: [" in plan
@@ -54,15 +54,17 @@ def test_filter_pushed_to_parquet_scan(spark, sf_dir):
     assert any("ts" in l and ("GreaterThanOrEqual" in l or "LessThan" in l) for l in pushed), pushed
 
 
-def test_column_pruning_in_read_schema(spark, sf_dir):
-    # cache=False alone is not enough: Spark's CacheManager substitutes
-    # ANY logical plan matching a cached one, so a lineitem persisted by
-    # an earlier test would replace this scan with InMemoryRelation.
-    # Drop the session table cache to audit the true cold path.
-    from pg_telemetry_spark.tables import clear_table_cache
+def test_column_pruning_in_read_schema(spark, sf_dir, monkeypatch):
+    # PG_TELEMETRY_SPARK_NO_TABLE_CACHE=1 alone is not enough: Spark's
+    # CacheManager substitutes ANY logical plan matching a cached one,
+    # so a lineitem persisted by an earlier test would replace this
+    # scan with InMemoryRelation.  Drop the session table cache too to
+    # audit the true cold path.
+    from pg_telemetry_spark.session import clear_session_state
 
-    clear_table_cache()
-    df = load_table(spark, sf_dir, "lineitem", cache=False).select("l_orderkey", "l_quantity")
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")
+    clear_session_state()
+    df = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     plan = _formatted(df)
     rs = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert rs and "l_orderkey" in rs[0] and "l_quantity" in rs[0]
@@ -108,7 +110,7 @@ def test_partition_pruning_on_warehouse_layout(spark, sf_dir):
     assert sliced.select(F.countDistinct("event_date")).head()[0] == 1
 
 
-def test_dynamic_partition_pruning_on_date_dim_join(spark, sf_dir):
+def test_dynamic_partition_pruning_on_date_dim_join(spark, sf_dir, monkeypatch):
     """DPP end-to-end (SURVEY §4.1's "biggest tsdb win"): when the
     partition filter is only knowable at RUNTIME — a join against a
     date dimension filtered on an attribute, not on the date — the
@@ -119,10 +121,11 @@ def test_dynamic_partition_pruning_on_date_dim_join(spark, sf_dir):
     import datetime as dt
 
     tmp = tempfile.mkdtemp(prefix="pgts_dpp_")
-    from pg_telemetry_spark.tables import clear_table_cache
+    from pg_telemetry_spark.session import clear_session_state
 
-    clear_table_cache()
-    events = load_table(spark, sf_dir, "events", cache=False)
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")
+    clear_session_state()
+    events = load_table(spark, sf_dir, "events")
     write_events_warehouse(events, f"{tmp}/events")
     fact = spark.read.parquet(f"{tmp}/events")
     # Calendar dim: the filter lands on day-of-week, so static pruning

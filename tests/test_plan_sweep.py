@@ -17,6 +17,7 @@ them would execute real jobs.
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import io
 import os
@@ -25,9 +26,8 @@ from pathlib import Path
 import pytest
 
 from pg_telemetry_spark.cache import release_pinned
-from pg_telemetry_spark.queries.llm import clear_shared_cache
 from pg_telemetry_spark.registry import all_queries
-from pg_telemetry_spark.tables import clear_table_cache
+from pg_telemetry_spark.session import clear_session_state
 
 _ALL = all_queries()
 
@@ -70,8 +70,7 @@ def _cold_caches(spark):
     per-query no-leaked-cache assertion below is exact."""
     old = os.environ.get("PG_TELEMETRY_SPARK_NO_TABLE_CACHE")
     os.environ["PG_TELEMETRY_SPARK_NO_TABLE_CACHE"] = "1"
-    clear_shared_cache()
-    clear_table_cache()
+    clear_session_state()
     release_pinned()
     spark.catalog.clearCache()
     yield
@@ -90,37 +89,55 @@ def test_no_scale_red_flags_in_plan(name, spark, sf_dir):
             f"{name}: row-at-a-time Python UDF in plan"
         )
     # No-leaked-cache contract (round 13): after releasing the pin
-    # registry and the deliberate session-shared dedup cache, the SQL
+    # registry and the deliberate session memos, the SQL
     # CacheManager must be EMPTY — DataFrame.persist registers there
     # at call time (no action needed), so a bare un-released persist
     # anywhere in this query's build path fails here by name.
     release_pinned()
-    clear_shared_cache()
+    clear_session_state()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         f"{name}: build left a cached DataFrame behind "
         "(use pg_telemetry_spark.cache.pin or a cleared session cache)"
     )
 
 
+def _persists_outside_memo(src: str) -> list[int]:
+    """Lines of ``.persist()`` calls not made inside a ``memo(...)``
+    call's arguments."""
+    tree = ast.parse(src)
+    in_memo = {
+        id(inner)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "memo"
+        for inner in ast.walk(node)
+    }
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "persist"
+        and id(node) not in in_memo
+    ]
+
+
 def test_no_bare_persist_in_query_sources():
     """Static leg of the cache contract: query modules must route
     every persist through ``cache.pin`` (released by the registry
-    hook) or a documented session cache with a clear hook.  The two
-    whitelisted files hold exactly those: llm.py's ``_shared``
-    (cleared by ``clear_shared_cache``) and graph_ops.py's pagerank
-    persist→collect→unpersist pair, balanced within its eager build
-    (praised shape — releases storage immediately, r12 verdict)."""
-    allowed = {"llm.py", "graph_ops.py"}
+    hook) or the session memo (``session.memo``, cleared by
+    ``clear_session_state``) — a persist is lawful only inside a
+    ``memo(...)`` call.  The one whitelisted file is graph_ops.py's
+    pagerank persist→collect→unpersist pair, balanced within its
+    eager build (praised shape — releases storage immediately, r12
+    verdict)."""
+    allowed = {"graph_ops.py"}
     qdir = Path(__file__).resolve().parent.parent / "pg_telemetry_spark" / "queries"
     offenders = []
     for p in sorted(qdir.glob("*.py")):
         if p.name in allowed:
             continue
         src = p.read_text()
-        for i, line in enumerate(src.splitlines(), 1):
-            code = line.split("#", 1)[0]
-            if ".persist(" in code and "``.persist()``" not in line:
-                offenders.append(f"{p.name}:{i}")
+        offenders += [f"{p.name}:{i}" for i in _persists_outside_memo(src)]
         # .cache() is persist() by another name: any file using it
         # must also unpersist (the corrupt-record reader releases in
         # a finally; the runtime isEmpty sweep checks the pairing

@@ -76,12 +76,12 @@ def test_reliable_checkpoint_dir_engages(spark, tmp_path):
 
 
 def test_changed_checkpoint_dir_reapplied_within_one_app(spark, tmp_path):
-    """_CKPT_DIR_LAST tracks the last-APPLIED dir per app: changing
-    PG_TELEMETRY_SPARK_CHECKPOINT_DIR mid-app must route new
+    """The session state's ``ckpt_dir`` tracks the last-APPLIED dir:
+    changing PG_TELEMETRY_SPARK_CHECKPOINT_DIR mid-app must route new
     checkpoints into the NEW directory instead of being silently
-    ignored (ADVICE r13), including on an A->B->A REVISIT — the case
-    the former (app_id, dir) set keying got wrong, because (app, A)
-    was already a member the second time A came around (ADVICE r14)."""
+    ignored, including on an A->B->A REVISIT — the case a set of
+    (app, dir) pairs gets wrong, because (app, A) is already a member
+    the second time A comes around."""
     import os
 
     from pg_telemetry_spark.session import iter_checkpoint
@@ -125,3 +125,84 @@ def test_eager_reliable_checkpoint_releases_its_persist(spark, tmp_path):
     assert not (lvl.useMemory() or lvl.useDisk()), (
         "eager reliable checkpoint leaked its persist on the input frame"
     )
+
+
+def _uses_storage(df) -> bool:
+    lvl = df._jdf.storageLevel()
+    return lvl.useMemory() or lvl.useDisk()
+
+
+def test_table_cache_repersists_after_clear_cache(spark, monkeypatch):
+    """spark.catalog.clearCache() unpersists the cached tables behind
+    the session memo's back.  clear_session_state() must make the next
+    load_table persist the table again, not hand back the unpersisted
+    frame (which would leave the table cache silently off)."""
+    from pg_telemetry_spark.session import clear_session_state
+    from pg_telemetry_spark.tables import load_table
+
+    monkeypatch.delenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", raising=False)
+    sf = "/root/testdata/sf0.001"
+    before = load_table(spark, sf, "nation")
+    assert load_table(spark, sf, "nation") is before
+    spark.catalog.clearCache()
+    clear_session_state()
+    after = load_table(spark, sf, "nation")
+    assert after is not before
+    assert _uses_storage(after)
+
+
+_CHILD = r"""
+import sys
+sys.path.insert(0, {repo!r})
+from pg_telemetry_spark.session import get_session, session_state
+from pg_telemetry_spark.tables import load_table
+
+def uses_storage(df):
+    lvl = df._jdf.storageLevel()
+    return lvl.useMemory() or lvl.useDisk()
+
+first_spark = get_session("session-state-child-a")
+first = load_table(first_spark, {sf!r}, "nation")
+n_first = first.count()
+first_spark.stop()
+spark = get_session("session-state-child-b")
+second = load_table(spark, {sf!r}, "nation")
+print(
+    "RESULT",
+    spark is not first_spark,
+    second is not first,
+    session_state(spark).spark is spark,
+    uses_storage(second),
+    second.count() == n_first,
+)
+spark.stop()
+"""
+
+
+def test_new_session_gets_fresh_state():
+    """A process that stops its session and builds a new one (bench's
+    per-leg restart) gets a fresh session state: the table cache is
+    persisted again on the live session, not handed back from the
+    dead one.  Child process, because the test session must stay up."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+    env.pop("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", None)
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _CHILD.format(repo=str(repo), sf="/root/testdata/sf0.001"),
+        ],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT")]
+    assert lines == ["RESULT True True True True True"], out.stdout[-2000:]

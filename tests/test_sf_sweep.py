@@ -19,7 +19,8 @@ import duckdb
 import pytest
 
 from pg_telemetry_spark.registry import all_queries
-from pg_telemetry_spark.tables import TABLE_NAMES, clear_table_cache
+from pg_telemetry_spark.session import clear_session_state
+from pg_telemetry_spark.tables import TABLE_NAMES
 from tests.oracle import assert_oracle_match
 
 _ALL = all_queries()
@@ -70,8 +71,8 @@ SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 @pytest.fixture(scope="module", params=SF_DIRS, ids=["sf0.001", "sf0.01"])
 def sweep_sf(request):
     # the session table cache is keyed by sf_dir, but clear anyway so
-    # each sf runs the cold unit-probe path too
-    clear_table_cache()
+    # each sf runs the cold table-load path too
+    clear_session_state()
     return request.param
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 from pg_telemetry_spark.queries.streaming_ops import (
     STREAM_SCHEMA,
@@ -526,3 +527,11 @@ def test_sized_shard_count_rule():
     assert sized_shard_count(3_200_001) == 65
     assert sized_shard_count(5_000_000) == 100
     assert sized_shard_count(1_000_000_000) == 20_000
+
+
+def test_malformed_stream_shuffle_env_names_the_variable(spark, monkeypatch):
+    """A bad PG_TELEMETRY_SPARK_STREAM_SHUFFLE fails at harness
+    construction with an error that says which variable is wrong."""
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "four")
+    with pytest.raises(ValueError, match="PG_TELEMETRY_SPARK_STREAM_SHUFFLE"):
+        FileStreamHarness(spark, STREAM_SCHEMA)

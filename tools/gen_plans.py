@@ -30,10 +30,8 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from bench import HEADLINE  # noqa: E402
-from pg_telemetry_spark.queries.llm import clear_shared_cache  # noqa: E402
 from pg_telemetry_spark.registry import all_queries  # noqa: E402
-from pg_telemetry_spark.session import get_session  # noqa: E402
-from pg_telemetry_spark.tables import clear_table_cache  # noqa: E402
+from pg_telemetry_spark.session import clear_session_state, get_session  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -125,8 +123,7 @@ def main() -> None:
         # canonical COLD plans (same protocol as tests/test_plan_budget):
         # persisted subtrees from earlier audits would otherwise be
         # substituted into later identical subtrees and shift counts
-        clear_table_cache()
-        clear_shared_cache()
+        clear_session_state()
         spark.catalog.clearCache()
         df = registry[name].fn(spark, SF_DIR)
         a = audit(plan_text(df))

@@ -46,12 +46,10 @@ def run_round(spark, reg, kill_after: float | None) -> dict:
     # make the disturbed round trivial and the kill land after
     # completion
     from pg_telemetry_spark.cache import release_pinned
-    from pg_telemetry_spark.queries.llm import clear_shared_cache
-    from pg_telemetry_spark.tables import clear_table_cache
+    from pg_telemetry_spark.session import clear_session_state
 
     release_pinned()
-    clear_shared_cache()
-    clear_table_cache()
+    clear_session_state()
     spark.catalog.clearCache()
 
     killed = {"pid": None}

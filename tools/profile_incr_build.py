@@ -40,8 +40,9 @@ def main() -> None:
     llm_ext._incr_base_index(spark, SF_DIR)
 
     def build():
-        sh_idx, sg_idx, bk_idx, st_idx = llm_ext._incr_base_index(spark, SF_DIR)
-        delta = llm_ext._incr_delta(spark, SF_DIR)
+        sh_idx, sg_idx, bk_idx, st_idx, delta = llm_ext._incr_base_index(
+            spark, SF_DIR
+        )
         pairs, *_ = incremental_near_duplicates(
             sh_idx, sg_idx, bk_idx, st_idx, delta, threshold=0.5
         )
