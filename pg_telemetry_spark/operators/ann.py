@@ -4,10 +4,11 @@ Brute force (operators/similarity.py) is exact but scans the whole
 corpus per probe.  The scale path is inverted-file (IVF) bucketing:
 
 - **index**: pick deterministic coarse centroids (every ``stride``-th
-  vector — at scale, k-means centroids trained on a sample), assign
-  every corpus vector to its nearest centroid's cell via a broadcast
-  of the (small) centroid set.  The corpus becomes (cell_id, vector)
-  — an equi-partitionable layout.
+  vector — at scale, k-means centroids trained on the driver from one
+  bounded sample), assign every corpus vector to its nearest
+  centroid's cell with the (small) centroid matrix shipped to every
+  task.  The corpus becomes (cell_id, vector) — an
+  equi-partitionable layout.
 - **search**: for each probe, rank cells by centroid similarity, keep
   the top ``nprobe``; join probes to corpus rows on cell_id (an
   equi-join on the blocking key — never a crossJoin) and take top-k
@@ -30,6 +31,43 @@ from pg_telemetry_spark.operators.similarity import as_double, dot
 from pg_telemetry_spark.session import ckpt_eager
 
 
+#: Training-sample cap per centroid (FAISS's ``max_points_per_centroid``
+#: default): the driver-side Lloyd loop never sees more than
+#: ``POINTS_PER_CENTROID * k`` vectors — 4096 x 64 doubles (2 MB) at
+#: k = 16 — whatever the corpus size.
+POINTS_PER_CENTROID = 256
+
+
+def _nearest_cell(mat, cmat):
+    """Row index into ``cmat`` of each ``mat`` row's nearest centroid.
+
+    Similarities are rounded to 6 dp and argmax takes the FIRST
+    maximum, so with ``cmat`` rows in ascending cell order ties break
+    to the smallest cell id — the SQL oracle's ``ORDER BY csim DESC,
+    cell_id``.  The (rows x K) sims matrix is the only allocation,
+    which matters when K is thousands of cells."""
+    import numpy as np
+
+    sims = mat @ cmat.T
+    np.round(sims, 6, out=sims)
+    return np.argmax(sims, axis=1)
+
+
+def _training_sample(
+    corpus: DataFrame, k: int, sample_stride: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, v) k-means training sample: the ``POINTS_PER_CENTROID * k``
+    lowest ids among ``id % sample_stride == 0``.  orderBy().limit()
+    compiles to TakeOrderedAndProject — a per-partition top-n plus a
+    driver merge — never a single-partition global sort."""
+    return (
+        corpus.filter(F.col(id_col) % sample_stride == 0)
+        .select(F.col(id_col), as_double(vec_col).alias("v"))
+        .orderBy(id_col)
+        .limit(POINTS_PER_CENTROID * k)
+    )
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     k: int = 16,
@@ -41,89 +79,45 @@ def kmeans_centroids(
     """Deterministic sampled Lloyd k-means for IVF coarse centroids:
     (cell_id, cv) with unit-normalized centroids.
 
-    Scale shape: train on a DETERMINISTIC sample (``id % stride == 0``
-    — reproducible across runs/cluster sizes, unlike
-    ``sample(fraction, seed)`` whose row assignment is
-    partitioning-dependent), with each Lloyd round two shuffles:
-    assign = broadcast-centroid crossJoin + per-id top-1 window;
-    re-estimate = posexplode to (cell, dim, x) + avg + re-pack.  The
-    centroid table never exceeds k rows, so every assignment pass is a
-    broadcast — the corpus never shuffles during training.  Fixed
-    ``iters`` (no convergence collect): IVF needs a decent coarse
+    Scale shape: ONE Spark job fetches a bounded, deterministic
+    training sample (:func:`_training_sample` — ``id % stride == 0``
+    is reproducible across runs and cluster sizes, unlike
+    ``sample(fraction, seed)``, and the id order makes every float sum
+    below independent of shuffle width, AQE and caching); the Lloyd
+    rounds then run in NumPy on the driver over at most
+    ``POINTS_PER_CENTROID * k`` vectors.  The full-corpus assignment
+    stays the Arrow-batched :func:`assign_nearest_cell` job.  Fixed
+    ``iters`` (no convergence test): IVF needs a decent coarse
     quantizer, not a converged clustering.
 
-    Centroids are L2-normalized so cosine cell ranking is not biased
-    toward dense cells; empty cells keep their previous centroid (the
-    LEFT side of the re-pack join is the previous centroid table).
+    The first k sample vectors are the initial centroids and their ids
+    are the cell ids.  Each round assigns by :func:`_nearest_cell` and
+    moves each centroid to the mean of its members; an empty cell
+    keeps its previous centroid.  Centroids are L2-normalized at the
+    end so cosine cell ranking is not biased toward dense cells.  The
+    result is a JVM-local table (pandas-built, LocalTableScan), so
+    collecting it again fires no job.
     """
-    from pg_telemetry_spark.session import sized_shuffle
+    import numpy as np
+    import pandas as pd
 
-    with sized_shuffle(corpus.sparkSession):
-        return _kmeans_centroids_impl(
-            corpus, k, iters, sample_stride, id_col, vec_col
-        )
-
-
-def _init_centroids(sample: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Deterministic k-means init: the k sample vectors with the
-    smallest ids.  orderBy().limit(k) compiles to
-    TakeOrderedAndProject — a per-partition top-k + driver merge of k
-    rows — where a global-order row_number() window would sort the
-    whole training sample in ONE partition (the round-7 weak grade).
-    The sample id itself is the cell label: cell_id only needs to be
-    distinct and deterministic (it is a join key and an orderBy
-    tie-break downstream), and id-order equals the old rank-order, so
-    every tie-break resolves identically to the former 0..k-1
-    labelling.  Exposed separately so the plan test can audit the
-    pre-checkpoint shape (tests/test_incr_index_plan.py's sibling in
-    test_plan_shapes)."""
-    return (
-        sample.orderBy(F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col).cast("long").alias("cell_id"), F.col("v").alias("cv"))
+    rows = _training_sample(corpus, k, sample_stride, id_col, vec_col).collect()
+    sample = np.array([r[1] for r in rows], dtype="float64")
+    cents = sample[:k].copy()
+    if len(rows):  # no id on the stride: nothing to train, no cells
+        for _ in range(iters):
+            cell = _nearest_cell(sample, cents)
+            for c in range(len(cents)):
+                members = sample[cell == c]
+                if len(members):
+                    cents[c] = members.mean(axis=0)
+        cents /= np.linalg.norm(cents, axis=1, keepdims=True)
+    frame = pd.DataFrame(
+        {"cell_id": [int(r[0]) for r in rows[:k]], "cv": list(cents)}
     )
-
-
-def _kmeans_centroids_impl(
-    corpus: DataFrame,
-    k: int,
-    iters: int,
-    sample_stride: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    sample = corpus.filter(F.col(id_col) % sample_stride == 0).select(
-        F.col(id_col), as_double(vec_col).alias("v")
-    ).persist()
-    cents = _init_centroids(sample, k, id_col).transform(ckpt_eager)
-    for _ in range(iters):
-        # BLAS assignment (matmul per Arrow batch vs the k-row centroid
-        # matrix) — the former crossJoin + fold-dot + top-1 window ran
-        # an interpreted lambda per (vector, centroid) pair, the same
-        # n x k trap measured at 48 s vs ~1 s in llm_semdedup
-        assigned = assign_nearest_cell(
-            sample, cents, id_col=id_col, vec_col="v"
-        ).join(sample, id_col)
-        dims = assigned.select("cell_id", F.posexplode("v").alias("i", "x"))
-        means = (
-            dims.groupBy("cell_id", "i")
-            .agg(F.avg("x").alias("mx"))
-            .groupBy("cell_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mx"))), lambda s: s["mx"]
-                ).alias("new_cv")
-            )
-        )
-        cents = (
-            cents.join(means, "cell_id", "left")
-            .select("cell_id", F.coalesce("new_cv", "cv").alias("cv"))
-            .transform(ckpt_eager)  # flat lineage per round
-        )
-    sample.unpersist()
-    return cents.withColumn(
-        "_n", F.sqrt(F.aggregate(F.transform("cv", lambda y: y * y), F.lit(0.0), lambda a, y: a + y))
-    ).select("cell_id", F.transform("cv", lambda x: x / F.col("_n")).alias("cv"))
+    return corpus.sparkSession.createDataFrame(
+        frame, schema="cell_id long, cv array<double>"
+    )
 
 
 def build_ivf_index(
@@ -215,15 +209,15 @@ def assign_nearest_cell(
     in the task closure exactly like :func:`_hyperplanes`' plane
     matrix — callers cap K by construction (<= 4096 rows, ~2 MB), so
     this is the broadcast-side-is-constant pattern, not a corpus
-    collect.  Similarities are rounded to 6 dp and ties break to the
-    SMALLEST cell id (centroid rows are scored in ascending-cell
-    order and argmax takes the first maximum), matching the SQL
-    oracle's ``ORDER BY csim DESC, cell_id`` exactly.
+    collect.  Centroid rows are sorted by cell id on the driver (at
+    most 4096 of them), so :func:`_nearest_cell`'s rounded-6dp,
+    first-maximum rule breaks ties to the SMALLEST cell id, matching
+    the SQL oracle's ``ORDER BY csim DESC, cell_id`` exactly.
     """
     import numpy as np
     import pandas as pd
 
-    rows = centroids.select(cell_col, cvec_col).orderBy(cell_col).collect()
+    rows = sorted(centroids.select(cell_col, cvec_col).collect(), key=lambda r: r[0])
     cell_ids = np.array([r[0] for r in rows], dtype="int64")
     cmat = np.array([list(r[1]) for r in rows], dtype="float64")
 
@@ -232,14 +226,7 @@ def assign_nearest_cell(
             if len(pdf) == 0:
                 continue
             mat = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            sims = mat @ cmat.T
-            np.round(sims, 6, out=sims)
-            # argmax returns the FIRST maximum — with centroid columns
-            # in ascending cell order that IS the smallest-cell
-            # tie-break, no compare matrix needed (the b x K sims
-            # matrix is the only allocation, which matters when K is
-            # thousands of cells)
-            idx = np.argmax(sims, axis=1)
+            idx = _nearest_cell(mat, cmat)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy(), cell_col: cell_ids[idx]}
             )

@@ -157,22 +157,38 @@ def test_merged_stats_equal_full_rebuild_stats(spark):
     assert merged == rebuilt
 
 
-def test_kmeans_init_is_take_ordered_not_global_window(spark, sf_dir):
-    """r7 weak #2: the k-means init must compile to
+def test_kmeans_sample_is_take_ordered_not_global_window(spark, sf_dir):
+    """r7 weak #2: the k-means training-sample fetch must compile to
     TakeOrderedAndProject, never a single-partition global-order
-    Window/Sort over the training sample."""
-    from pg_telemetry_spark.operators.ann import _init_centroids
-    from pg_telemetry_spark.operators.similarity import as_double
+    Window/Sort over the sample."""
+    from pg_telemetry_spark.operators.ann import _training_sample
     from pg_telemetry_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sample = emb.filter(F.col("vec_id") % 7 == 0).select(
-        F.col("vec_id"), as_double("embedding").alias("v")
-    )
-    plan = _formatted(_init_centroids(sample, 16, "vec_id"))
+    plan = _formatted(_training_sample(emb, 16, 7, "vec_id", "embedding"))
     assert "TakeOrderedAndProject" in plan, plan
     assert "Window" not in plan
     assert "Exchange SinglePartition" not in plan
+
+
+def test_ivf_kmeans_build_fires_at_most_one_job(spark, sf_dir):
+    """Building llm_ann_ivf_kmeans (before its collect) trains the
+    quantizer with ONE Spark job — the bounded sample fetch — where a
+    Spark-side Lloyd loop fires jobs per round."""
+    from pg_telemetry_spark.registry import all_queries
+    from pg_telemetry_spark.tables import load_table
+
+    load_table(spark, sf_dir, "embeddings").count()  # table cache warm
+    sc = spark.sparkContext
+    group = "ivf-kmeans-build-budget"
+    sc.setJobGroup(group, group)
+    try:
+        all_queries()["llm_ann_ivf_kmeans"].fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 1, jobs
 
 
 @pytest.mark.parametrize("kind", ["incr", "ann"])

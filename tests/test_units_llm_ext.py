@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from pg_telemetry_spark.operators.ann import build_ivf_index, ivf_topk
 from pg_telemetry_spark.operators.similarity import brute_force_topk
@@ -94,6 +95,79 @@ def test_ivf_kmeans_structural_recall_and_determinism(spark, sf_dir):
         (r.cell_id, tuple(round(x, 12) for x in r.cv)) for r in cent_rows
     }
     assert again == first, "k-means centroids not deterministic across runs"
+
+
+def _reference_kmeans(sf: str, k: int = 16, iters: int = 3, stride: int = 4):
+    """Plain-Python Lloyd over the stride sample read straight from
+    the Parquet file (no Spark, no NumPy): the first k sample rows
+    seed the cells, each round assigns by round(dot, 6) with ties to
+    the first (smallest-id) cell, moves each centroid to its members'
+    mean (an empty cell keeps its centroid), then L2-normalizes."""
+    import math
+
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(f"{sf}/embeddings.parquet", columns=["vec_id", "embedding"])
+    sample = sorted(
+        (r["vec_id"], r["embedding"]) for r in rows.to_pylist() if r["vec_id"] % stride == 0
+    )[: 256 * k]
+    cents = [list(v) for _, v in sample[:k]]
+    for _ in range(iters):
+        members: list[list] = [[] for _ in cents]
+        for _, v in sample:
+            sims = [round(sum(a * b for a, b in zip(v, c)), 6) for c in cents]
+            members[sims.index(max(sims))].append(v)
+        for c, m in enumerate(members):
+            if m:
+                cents[c] = [sum(col) / len(m) for col in zip(*m)]
+    unit = []
+    for c in cents:
+        n = math.sqrt(sum(x * x for x in c))
+        unit.append([x / n for x in c])
+    return [i for i, _ in sample[:k]], unit
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.1"])
+def test_kmeans_centroids_match_python_reference(spark, sf_dir, scale):
+    import os
+
+    from pg_telemetry_spark.operators.ann import kmeans_centroids
+
+    sf = os.path.join(os.path.dirname(sf_dir), scale)
+    ids, cents = _reference_kmeans(sf)
+    got = sorted(
+        (r.cell_id, r.cv) for r in kmeans_centroids(load_table(spark, sf, "embeddings")).collect()
+    )
+    assert [i for i, _ in got] == ids
+    for (cell, cv), ref in zip(got, cents):
+        assert max(abs(a - b) for a, b in zip(cv, ref)) < 1e-12, cell
+
+
+def test_kmeans_centroids_independent_of_execution_config(spark, sf_dir, monkeypatch):
+    """Bit-identical centroids across shuffle width, AQE and the table
+    cache: the id-ordered sample fixes every float sum's order."""
+    from pg_telemetry_spark.operators.ann import kmeans_centroids
+
+    def centroids():
+        emb = load_table(spark, sf_dir, "embeddings")
+        return [(r.cell_id, list(r.cv)) for r in kmeans_centroids(emb).collect()]
+
+    base = centroids()
+    saved = {
+        key: spark.conf.get(key)
+        for key in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    }
+    try:
+        for width in ("1", "7", "32"):
+            for aqe in ("true", "false"):
+                spark.conf.set("spark.sql.shuffle.partitions", width)
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                assert centroids() == base, (width, aqe)
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")
+    assert centroids() == base
 
 
 def test_multimodal_plumbing_deterministic_and_shaped(spark, sf_dir):
