@@ -61,11 +61,7 @@ def _connected_components_impl(
     # each AQE query stage is an extra blocking job.
     from pg_telemetry_spark.session import default_parallelism, sized_shuffle
 
-    with sized_shuffle(
-        edges.sparkSession,
-        partitions=default_parallelism(edges.sparkSession),
-        adaptive=False,
-    ):
+    with sized_shuffle(edges.sparkSession, default_parallelism(edges.sparkSession)):
         labels = (
             sym.groupBy("src")
             .agg(F.least(F.min("dst"), F.first("src")).alias("comp"))
@@ -205,11 +201,7 @@ def connected_components_star(
     # stage is an extra blocking job.  The measured distinct-edge
     # count then derives the loop's shuffle width — same sizing rule
     # as connected_components.
-    with sized_shuffle(
-        edges.sparkSession,
-        partitions=default_parallelism(edges.sparkSession),
-        adaptive=False,
-    ):
+    with sized_shuffle(edges.sparkSession, default_parallelism(edges.sparkSession)):
         und = (
             edges.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
             .filter(F.col("u") != F.col("v"))

@@ -23,7 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.tables import load_table
+from pg_telemetry_spark.tables import load_table, respread_if_narrow
 
 EVENTS_V = (
     "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, "
@@ -1027,9 +1027,7 @@ def agg_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning) — partial composition may shift estimates within
     # tolerance, never counts.  No-op at warehouse scale (multi-split
     # scans skip the respread).
-    from pg_telemetry_spark.session import respread_if_narrow
-
-    e = respread_if_narrow(e)
+    e = respread_if_narrow(e, f"{sf_dir}/events.parquet")
 
     def partials(batches):
         for pdf in batches:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pg_telemetry_spark.registry import query
+from pg_telemetry_spark.session import scoped_confs
 from pg_telemetry_spark.streaming.harness import FileStreamHarness
 from pg_telemetry_spark.tables import load_table
 
@@ -344,7 +345,7 @@ def snk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = FileStreamHarness(spark, STREAM_SCHEMA)
     for b in (day1, day2):
         h.add_batch(b)
-        with h.sized_shuffle():
+        with scoped_confs(spark, h.stream_confs):
             q = (
                 h.stream()
                 .writeStream.foreachBatch(write_warehouse)

@@ -1,13 +1,15 @@
-"""SparkSession factory and session preparation.
+"""SparkSession factory, session preparation and scoped conf changes.
 
-Two entry points:
+This module owns session configuration:
 
-- :func:`get_session` — build a local session with the engine's
-  required configuration (tests, bench).
+- :func:`get_session` — build a local session (tests, bench); its
+  builder sets only static confs.
 - :func:`prepare_session` — apply the runtime-settable required confs
-  to an EXISTING session (the driver owns the session for the
-  ``__spark_entry__`` contract; these confs are all ``spark.sql.*``
-  runtime confs, verified settable post-creation).
+  to an EXISTING session, once per session object (the driver owns the
+  session for the ``__spark_entry__`` contract; these confs are all
+  ``spark.sql.*`` runtime confs, verified settable post-creation).
+- :func:`scoped_confs` — every temporary conf change (loop widths, the
+  streaming harness): set for one block, restored on exit.
 
 Required confs and why:
 
@@ -27,6 +29,8 @@ Required confs and why:
 
 from __future__ import annotations
 
+import contextlib
+import math
 import os
 
 from pyspark.sql import SparkSession
@@ -58,10 +62,9 @@ RUNTIME_CONFS: dict[str, str] = {
 #: the broadcast side — the plans audited in PLANS.md assume it — and
 #: 200 default shuffle partitions launch near-empty tasks per shuffle
 #: at fixture scale.  Applied ONLY while the session still carries the
-#: Spark built-in default, so a deliberate site config (or a
-#: ``sized_shuffle`` cap in effect when ``prepare_session`` re-runs
-#: mid-operator) is never stomped.  At cluster scale the initial
-#: partition count is sized to the cluster and AQE coalesces down.
+#: Spark built-in default, so a deliberate site config is never
+#: stomped.  At cluster scale the initial partition count is sized to
+#: the cluster and AQE coalesces down.
 SIZING_CONFS: dict[str, tuple[str, str]] = {
     # key: (spark built-in default, engine value)
     "spark.sql.autoBroadcastJoinThreshold": ("10485760b", str(32 * 1024 * 1024)),
@@ -76,8 +79,8 @@ class SessionState:
       table cache, the dedup family's shared intermediates, the disk
       index read-back scans.  Bound to this session's JVM, so they die
       with it.
-    - ``shipped``: the package zip has been added to this session's
-      executors (:func:`ship_package`).
+    - ``prepared``: :func:`prepare_session` has applied the engine
+      confs to this session and shipped the package to its executors.
     - ``ckpt_dir``: the checkpoint directory last APPLIED to this
       session's SparkContext (:func:`iter_checkpoint`).
     """
@@ -85,7 +88,7 @@ class SessionState:
     def __init__(self, spark: SparkSession) -> None:
         self.spark = spark
         self.frames: dict[tuple, object] = {}
-        self.shipped = False
+        self.prepared = False
         self.ckpt_dir: str | None = None
 
 
@@ -134,7 +137,8 @@ def clear_session_state() -> None:
 
 
 def ship_package(spark: SparkSession) -> None:
-    """Ship the engine source to executor Python workers (idempotent).
+    """Ship the engine source to executor Python workers (called once
+    per session, by :func:`prepare_session`).
 
     ``local[*]`` executors share the driver's interpreter and see its
     ``sys.path``, so every UDF the engine pickles BY REFERENCE
@@ -160,8 +164,7 @@ def ship_package(spark: SparkSession) -> None:
         master = spark.sparkContext.master
     except Exception:
         return  # Spark Connect — no classic sparkContext
-    state = session_state(spark)
-    if master.startswith("local[") or state.shipped:
+    if master.startswith("local["):
         return
     import tempfile
     import zipfile
@@ -180,13 +183,18 @@ def ship_package(spark: SparkSession) -> None:
                 z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
     os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
-    state.shipped = True
 
 
 def prepare_session(spark: SparkSession) -> SparkSession:
-    """Apply required runtime confs to an existing session (idempotent),
-    and ship the package source to remote executors when the master
-    runs them as separate processes (see :func:`ship_package`)."""
+    """Apply required runtime confs to an existing session, and ship
+    the package source to remote executors when the master runs them
+    as separate processes (see :func:`ship_package`) — once per session
+    object.  Later calls are a Python identity check, so a conf the
+    caller sets after first use (AQE off, a time zone) survives every
+    ``load_table``; a new session object is prepared afresh."""
+    state = session_state(spark)
+    if state.prepared:
+        return spark
     ship_package(spark)
     for key, value in RUNTIME_CONFS.items():
         try:
@@ -202,6 +210,7 @@ def prepare_session(spark: SparkSession) -> SparkSession:
                 spark.conf.set(key, value)
         except Exception:
             pass
+    state.prepared = True
     return spark
 
 
@@ -221,44 +230,34 @@ def default_parallelism(spark: SparkSession) -> int:
             return 200
 
 
-import contextlib
+#: Loop width floor: the measured local optimum at fixture scale,
+#: where per-partition fixed costs dominate.
+LOOP_WIDTH_FLOOR = 8
+#: Loop state rows per partition: a reduce partition in the tens of MB
+#: — small, because a round's wall-clock is its slowest partition.
+LOOP_ROWS_PER_PARTITION = 250_000
 
 
-def loop_shuffle_width(
-    spark: SparkSession,
-    n_rows: int,
-    floor: int = 8,
-    rows_per_partition: int = 250_000,
-) -> int:
+def loop_shuffle_width(spark: SparkSession, n_rows: int) -> int:
     """Shuffle width for a bounded iterative loop, derived from the
     MEASURED per-round state size instead of a constant (optimization
     r17, guide §2.2/§2.5; VERDICT r16 #1).
 
     Every iterative operator already counts its state (vertices,
     edges, labels) before the loop — this turns that count into the
-    loop's shuffle width: ``clamp(ceil(n_rows / rows_per_partition),
-    floor, default_parallelism)``.  The floor is the measured local
-    optimum (8 at fixture scale, where per-partition fixed costs
-    dominate); the ceiling is the cluster width, so a big graph's
-    per-round aggregation can use every core instead of serializing
-    on a local-mode constant.  250k state rows per partition keeps a
-    reduce partition in the tens of MB — deliberately small, because
-    loop rounds rebuild the reduce state every iteration and a round's
-    wall-clock is its slowest partition."""
-    import math
-
-    hi = max(default_parallelism(spark), floor)
-    want = max(floor, math.ceil(max(int(n_rows), 1) / rows_per_partition))
+    loop's shuffle width: ``clamp(ceil(n_rows /
+    LOOP_ROWS_PER_PARTITION), LOOP_WIDTH_FLOOR, default_parallelism)``.
+    The ceiling is the cluster width, so a big graph's per-round
+    aggregation can use every core instead of serializing on a
+    local-mode constant."""
+    hi = max(default_parallelism(spark), LOOP_WIDTH_FLOOR)
+    want = max(
+        LOOP_WIDTH_FLOOR, math.ceil(max(int(n_rows), 1) / LOOP_ROWS_PER_PARTITION)
+    )
     return min(want, hi)
 
 
-def loop_sizing(
-    spark: SparkSession,
-    n_rows: int,
-    small_cap: int = 5_000_000,
-    floor: int = 8,
-    rows_per_partition: int = 250_000,
-):
+def loop_sizing(spark: SparkSession, n_rows: int, small_cap: int = 5_000_000):
     """Shuffle context for a bounded iterative loop BODY, chosen from
     the measured state/edge row count (optimization r17; VERDICT r16
     #1 and ADVICE r16 #1).
@@ -279,49 +278,34 @@ def loop_sizing(
     hint (e.g. ``_BCAST_VERTEX_CAP``) so the AQE-off regime and the
     broadcast regime coincide."""
     if int(n_rows) <= small_cap:
-        return sized_shuffle(
-            spark,
-            partitions=loop_shuffle_width(spark, n_rows, floor, rows_per_partition),
-            adaptive=False,
-        )
+        return sized_shuffle(spark, loop_shuffle_width(spark, n_rows))
     return contextlib.nullcontext()
 
 
-def respread_if_narrow(df, width: int | None = None):
-    """Round-robin respread of a narrow projection whose scan loaded
-    fewer splits than the session parallelism (optimization r17,
-    VERDICT r16 #4; guide §2.5 'one huge unsplittable file →
-    repartition immediately after the read'): every fixture table is
-    one single-row-group parquet file, so however many splits the scan
-    plans, all rows land in ONE, serializing all downstream narrow
-    compute.  The respread is a no-op when the scan already loads at
-    least cluster-width splits (the 100 TB case), so it never adds an
-    exchange at scale.
-
-    ONLY lawful upstream of order-independent consumers — integer or
-    exact aggregations, min/max selections, mergeable sketches with a
-    tolerance contract.  A respread upstream of a plain double sum
-    changes accumulation order and breaks the bit-exact oracle hash
-    (the measured _REBALANCE_ON_CACHE boundary in tables.py); callers
-    own that proof, and the sf0.001 parity sweep is the cheap check.
-    Round-robin is retry-safe (sortBeforeRepartition, SPARK-23207).
-    """
-    spark = df.sparkSession
-    target = width or default_parallelism(spark)
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    return df.repartition(target) if n < target else df
-
-
 @contextlib.contextmanager
-def sized_shuffle(
-    spark: SparkSession, partitions: int = 16, adaptive: bool | None = None
-):
-    """Temporarily cap ``spark.sql.shuffle.partitions`` (restored on
-    exit).  For ITERATIVE operators whose per-round state is tiny by
-    construction (component labels, k centroids): on a host session
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for one block, then restore each key: its previous
+    value, or unset when it was not set before."""
+    old = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def sized_shuffle(spark: SparkSession, partitions: int):
+    """Cap ``spark.sql.shuffle.partitions`` at ``partitions`` (never
+    raising it) and disable AQE for one block; both are restored on
+    exit (:func:`scoped_confs`).
+
+    For ITERATIVE operators whose per-round state is tiny by
+    construction (component labels, graph ranks): on a host session
     left at the 200-partition default, every round's join + checkpoint
     materializes 200 near-empty partitions and the fixed per-partition
     cost dwarfs the work.  AQE coalesces shuffle READS but the
@@ -330,32 +314,21 @@ def sized_shuffle(
     At cluster scale the caller picks a cap matching its parallelism;
     this never touches non-iterative query plans.
 
-    ``adaptive=False`` additionally disables AQE inside the block
-    (optimization r16).  In a bounded iterative loop whose per-round
-    join strategy is already pinned (explicit gated broadcast) and
-    whose shuffle width this cap already sizes, AQE's runtime
-    re-planning contributes nothing — its join re-selection is moot,
-    its skew handling only applies to sort-merge/shuffled-hash JOINS
-    (never to the loop's aggregations), and its read coalescing is
-    subsumed by the cap — while every query stage it materializes is
-    an extra blocking job: measured on wl_pagerank's 8 rounds at
-    sf0.1, AQE on = 29 jobs / 3.7-6.2 s vs off = 19 jobs / 2.8-3.3 s,
-    identical ranks.  Default ``None`` leaves the session setting
-    untouched."""
+    AQE is off inside the block (optimization r16).  In a bounded
+    iterative loop whose per-round join strategy is already pinned
+    (explicit gated broadcast) and whose shuffle width this cap
+    already sizes, AQE's runtime re-planning contributes nothing — its
+    join re-selection is moot, its skew handling only applies to
+    sort-merge/shuffled-hash JOINS (never to the loop's aggregations),
+    and its read coalescing is subsumed by the cap — while every query
+    stage it materializes is an extra blocking job: measured on
+    wl_pagerank's 8 rounds at sf0.1, AQE on = 29 jobs / 3.7-6.2 s vs
+    off = 19 jobs / 2.8-3.3 s, identical ranks."""
     key = "spark.sql.shuffle.partitions"
-    akey = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    old_adaptive = spark.conf.get(akey) if adaptive is not None else None
-    try:
-        if int(old) > partitions:
-            spark.conf.set(key, str(partitions))
-        if adaptive is not None:
-            spark.conf.set(akey, str(adaptive).lower())
-        yield
-    finally:
-        spark.conf.set(key, old)
-        if old_adaptive is not None:
-            spark.conf.set(akey, old_adaptive)
+    width = min(int(spark.conf.get(key)), partitions)
+    return scoped_confs(
+        spark, {key: str(width), "spark.sql.adaptive.enabled": "false"}
+    )
 
 
 def iter_checkpoint(df, eager: bool = True):
@@ -416,10 +389,8 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
     """Build (or fetch) a local session configured for the engine.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all).
-    Shuffle partitions are sized for the local fixture scale; at
-    cluster scale this is AQE-governed (initialPartitionNum high,
-    coalesce down), so the literal number here is not a scale
-    assumption.
+    The builder sets only static confs; every engine conf comes from
+    :func:`prepare_session`, as on a host's plain session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # SPARK_GRAFT_MASTER overrides the local master entirely (e.g.
@@ -430,7 +401,6 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", "32")
         # 16g default (round 9): the single-JVM local harness now runs
         # 135-query legs up to sf10 in one session; 8g survived 67
         # queries (r8) but OOMed ~120 queries into the r9 sf10 leg.
@@ -438,7 +408,6 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
         # assumption — the box has 128 GiB.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
     if not master.startswith("local["):
         # separate executor processes: size their heaps explicitly
@@ -448,8 +417,6 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
             "spark.executor.memory",
             os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "3g"),
         )
-    for key, value in RUNTIME_CONFS.items():
-        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return prepare_session(spark)

@@ -15,7 +15,6 @@ the capture function is replaced by ``batch_df.write.format("jdbc")``
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
 from dataclasses import dataclass, field
@@ -24,6 +23,8 @@ from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from pg_telemetry_spark.session import scoped_confs
 
 
 def _env_stream_shuffle() -> int:
@@ -81,31 +82,17 @@ class FileStreamHarness:
     #: change and dataclass treats it as shared state, not a field.
     progress_log: ClassVar[list] = []
 
-    @contextlib.contextmanager
-    def sized_shuffle(self):
-        """Temporarily size shuffle/state partitioning (and select the
-        state-store provider) for a local micro-batch run; always
-        restores the host session's values."""
-        keys = {"spark.sql.shuffle.partitions": str(self.shuffle_partitions)}
+    @property
+    def stream_confs(self) -> dict[str, str]:
+        """Shuffle/state partitioning and state-store provider for one
+        local micro-batch run — set through ``session.scoped_confs``,
+        which restores the host session's values afterwards."""
+        confs = {"spark.sql.shuffle.partitions": str(self.shuffle_partitions)}
         if self.state_store_provider:
-            keys["spark.sql.streaming.stateStore.providerClass"] = (
+            confs["spark.sql.streaming.stateStore.providerClass"] = (
                 self.state_store_provider
             )
-        old: dict[str, str | None] = {}
-        for k, v in keys.items():
-            try:
-                old[k] = self.spark.conf.get(k)
-            except Exception:
-                old[k] = None
-            self.spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    self.spark.conf.unset(k)
-                else:
-                    self.spark.conf.set(k, v)
+        return confs
 
     @property
     def landing(self) -> str:
@@ -136,7 +123,7 @@ class FileStreamHarness:
         def capture(batch_df: DataFrame, batch_id: int) -> None:
             captured.append(batch_df.collect())
 
-        with self.sized_shuffle():
+        with scoped_confs(self.spark, self.stream_confs):
             q = (
                 transformed.writeStream.foreachBatch(capture)
                 .outputMode(output_mode)

@@ -194,6 +194,23 @@ def _cache_enabled() -> bool:
 _REBALANCE_ON_CACHE = frozenset({"documents", "embeddings"})
 
 
+def _data_file_sizes(path: str) -> list[int]:
+    """Sizes of the data files at ``path`` (a file, or a directory tree
+    minus Spark's hidden ``_``/``.`` files): a driver-side ``stat``,
+    never a Spark job; ``[]`` when ``path`` cannot be stat'ed."""
+    try:
+        if not os.path.isdir(path):
+            return [os.path.getsize(path)]
+        return [
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
+    except OSError:
+        return []
+
+
 def _cache_rebalance_width(spark: SparkSession, path: str) -> int:
     """Width of the one-time cached-relation rebalance, derived from
     the table's on-disk parquet size (a driver-side ``stat`` — never a
@@ -203,21 +220,47 @@ def _cache_rebalance_width(spark: SparkSession, path: str) -> int:
     scale) and clamped to ``default_parallelism`` so a narrow session
     (e.g. local[2]) is never over-partitioned.  Non-posix paths (the
     fixture cache is local-disk only) fall back to the floor."""
-    try:
-        if os.path.isdir(path):
-            nbytes = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _dirs, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            nbytes = os.path.getsize(path)
-    except OSError:
-        nbytes = 0
+    nbytes = sum(_data_file_sizes(path))
     per_partition = 64 * 1024 * 1024
     return min(
         default_parallelism(spark), max(8, -(-nbytes // per_partition))
     )
+
+
+#: Parquet bytes per loaded scan split: the writers' default row group
+#: (a row group loads whole into one split).
+_SPLIT_BYTES = 128 * 1024 * 1024
+
+
+def respread_if_narrow(df: DataFrame, path: str) -> DataFrame:
+    """Round-robin respread of a narrow projection of the table at
+    ``path`` when its scan loads fewer splits than the session
+    parallelism (optimization r17, VERDICT r16 #4; guide §2.5 'one
+    huge unsplittable file → repartition immediately after the read'):
+    every fixture table is one single-row-group parquet file, so
+    however many splits the scan plans, all rows land in ONE,
+    serializing all downstream narrow compute.  The respread is a
+    no-op when the scan already loads at least cluster-width splits
+    (the 100 TB case), so it never adds an exchange at scale.
+
+    The LOADED split count comes from the data files' sizes on the
+    driver (no RDD, no job): each file loads at least one split and at
+    most one per row group.  An unreadable path leaves ``df`` as is.
+
+    ONLY lawful upstream of order-independent consumers — integer or
+    exact aggregations, min/max selections, mergeable sketches with a
+    tolerance contract.  A respread upstream of a plain double sum
+    changes accumulation order and breaks the bit-exact oracle hash
+    (the measured _REBALANCE_ON_CACHE boundary above); callers own
+    that proof, and the sf0.001 parity sweep is the cheap check.
+    Round-robin is retry-safe (sortBeforeRepartition, SPARK-23207).
+    """
+    sizes = _data_file_sizes(path)
+    if not sizes:
+        return df
+    target = default_parallelism(df.sparkSession)
+    splits = sum(max(1, -(-size // _SPLIT_BYTES)) for size in sizes)
+    return df.repartition(target) if splits < target else df
 
 
 #: Raw read schema for the TIMESTAMP(NANOS) physical variant: under
@@ -303,7 +346,9 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with its explicit schema, through the
     session table cache unless PG_TELEMETRY_SPARK_NO_TABLE_CACHE=1
-    (then the direct pushdown-friendly read, as plan audits need)."""
+    (then the direct pushdown-friendly read, as plan audits need).
+    The first call prepares the session; later ones leave its confs
+    as the caller set them."""
     prepare_session(spark)
     if not _cache_enabled():
         return _read_table(spark, sf_dir, name)

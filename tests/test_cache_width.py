@@ -1,4 +1,5 @@
-"""Cached-table rebalance: width derivation + hash-parity guard.
+"""Cached-table rebalance: width derivation + hash-parity guard; and
+the file-stat gate of the query-local respread that shares its stat.
 
 ADVICE r16 flagged two gaps around the documents/embeddings cache
 rebalance (tables.py):
@@ -18,7 +19,12 @@ import pytest
 
 from pg_telemetry_spark.registry import all_queries
 from pg_telemetry_spark.session import clear_session_state
-from pg_telemetry_spark.tables import _cache_rebalance_width, load_table
+from pg_telemetry_spark.tables import (
+    SCHEMAS,
+    _cache_rebalance_width,
+    load_table,
+    respread_if_narrow,
+)
 
 _ALL = all_queries()
 
@@ -84,3 +90,38 @@ def test_cache_on_off_parity(name, spark, sf_dir, monkeypatch):
     finally:
         clear_session_state()
     assert cold == warm
+
+
+def test_respread_decision_from_file_stat(spark, sf_dir, tmp_path):
+    """respread_if_narrow decides from the data files' sizes on the
+    driver, firing no Spark job: a one-file table (one loaded split) is
+    respread to the session parallelism; a directory of at least that
+    many files is left alone."""
+    import pyarrow.parquet as pq
+
+    from pg_telemetry_spark.session import default_parallelism
+
+    dp = default_parallelism(spark)
+    one = f"{sf_dir}/events.parquet"
+    many = tmp_path / "events_dir"
+    many.mkdir()
+    table = pq.read_table(one).slice(0, 10)
+    for i in range(dp):
+        pq.write_table(table, many / f"part-{i:05d}.parquet")
+    (many / "_SUCCESS").write_text("")
+
+    sc = spark.sparkContext
+    group = "respread-decision"
+    sc.setJobGroup(group, group)
+    try:
+        one_df = spark.read.schema(SCHEMAS["events"]).parquet(one)
+        many_df = spark.read.schema(SCHEMAS["events"]).parquet(str(many))
+        spread = respread_if_narrow(one_df, one)
+        kept = respread_if_narrow(many_df, str(many))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    if dp > 1:
+        assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
+    assert kept is many_df

@@ -147,3 +147,32 @@ def test_no_bare_persist_in_query_sources():
         ) and ".unpersist()" not in src:
             offenders.append(f"{p.name}: .cache() without unpersist")
     assert not offenders, f"bare .persist()/.cache() outside pin(): {offenders}"
+
+
+def _conf_changes(src: str) -> list[int]:
+    """Lines of ``<x>.conf.set(...)`` / ``<x>.conf.unset(...)`` calls."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("set", "unset")
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+    ]
+
+
+def test_conf_changes_only_in_session_module():
+    """Static leg of the conf contract: session.py owns every session
+    conf change — prepare_session applies the engine confs once per
+    session, and scoped_confs sets and restores temporary ones.  A
+    ``.conf.set(``/``.conf.unset(`` anywhere else in the package is a
+    second save/restore copy that can leak a conf past its block."""
+    pkg = Path(__file__).resolve().parent.parent / "pg_telemetry_spark"
+    offenders = [
+        f"{p.relative_to(pkg)}:{line}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "session.py"
+        for line in _conf_changes(p.read_text())
+    ]
+    assert not offenders, f"conf set/unset outside session.py: {offenders}"

@@ -1,25 +1,52 @@
 """prepare_session conf discipline.
 
-Required confs are always (re)applied; SIZING confs are defaults-only
-— prepare_session runs inside every load_table call, so if it stomped
-a non-default value it would break sized_shuffle's temporary cap
-mid-operator and override deliberate site configs.
+prepare_session applies the engine confs the first time it sees a
+session object and never again, so a conf the caller changes after
+first use survives every later load_table.  Within that first call,
+required confs are always applied and SIZING confs are defaults-only,
+so a deliberate site config is never overridden.  scoped_confs is the
+one save/set/restore helper for temporary conf changes.
 """
 
 from __future__ import annotations
 
-from pg_telemetry_spark.session import SIZING_CONFS, prepare_session, sized_shuffle
+import pytest
+
+from pg_telemetry_spark import session
+from pg_telemetry_spark.session import (
+    SIZING_CONFS,
+    prepare_session,
+    scoped_confs,
+    sized_shuffle,
+)
+from pg_telemetry_spark.tables import load_table
 
 _SHUF = "spark.sql.shuffle.partitions"
+_AQE = "spark.sql.adaptive.enabled"
+_TZ = "spark.sql.session.timeZone"
 
 
-def test_required_confs_always_reapplied(spark):
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    prepare_session(spark)
-    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+@pytest.fixture()
+def unprepared(monkeypatch):
+    """Make the next prepare_session see the test session as new; the
+    real session state (and its memoized frames) comes back after."""
+    monkeypatch.setattr(session, "_STATE", None)
 
 
-def test_sizing_conf_applied_over_spark_default(spark):
+def test_caller_conf_survives_load_table(spark, sf_dir):
+    saved = {key: spark.conf.get(key) for key in (_AQE, _TZ)}
+    try:
+        spark.conf.set(_AQE, "false")
+        spark.conf.set(_TZ, "America/New_York")
+        load_table(spark, sf_dir, "nation")
+        assert spark.conf.get(_AQE) == "false"
+        assert spark.conf.get(_TZ) == "America/New_York"
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+
+
+def test_sizing_conf_applied_over_spark_default(spark, unprepared):
     old = spark.conf.get(_SHUF)
     try:
         spark.conf.set(_SHUF, SIZING_CONFS[_SHUF][0])  # the Spark default
@@ -29,7 +56,7 @@ def test_sizing_conf_applied_over_spark_default(spark):
         spark.conf.set(_SHUF, old)
 
 
-def test_sizing_conf_respects_non_default_value(spark):
+def test_sizing_conf_respects_non_default_value(spark, unprepared):
     old = spark.conf.get(_SHUF)
     try:
         spark.conf.set(_SHUF, "17")  # deliberate site/operator value
@@ -44,6 +71,25 @@ def test_sized_shuffle_cap_survives_prepare_session(spark):
         prepare_session(spark)  # load_table inside an operator loop
         assert spark.conf.get(_SHUF) == "4"
     assert spark.conf.get(_SHUF) != "4"
+
+
+def test_scoped_confs_restores_set_and_unsets_absent_keys(spark):
+    absent = "spark.pg_telemetry_spark.test.absent"
+    old = spark.conf.get(_SHUF)
+    assert spark.conf.get(absent, None) is None
+    with scoped_confs(spark, {_SHUF: "3", absent: "x"}):
+        assert spark.conf.get(_SHUF) == "3"
+        assert spark.conf.get(absent) == "x"
+    assert spark.conf.get(_SHUF) == old
+    assert spark.conf.get(absent, None) is None
+
+
+def test_scoped_confs_restores_when_the_block_raises(spark):
+    old = spark.conf.get(_AQE)
+    with pytest.raises(RuntimeError):
+        with scoped_confs(spark, {_AQE: "false"}):
+            raise RuntimeError("block failed")
+    assert spark.conf.get(_AQE) == old
 
 
 def test_reliable_checkpoint_dir_engages(spark, tmp_path):
@@ -206,3 +252,50 @@ def test_new_session_gets_fresh_state():
     assert out.returncode == 0, out.stderr[-2000:]
     lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT")]
     assert lines == ["RESULT True True True True True"], out.stdout[-2000:]
+
+
+_PLAIN_CHILD = r"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from pg_telemetry_spark.session import RUNTIME_CONFS, SIZING_CONFS
+from pg_telemetry_spark.tables import load_table
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .appName("plain-session-child")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "America/New_York")
+    .getOrCreate()
+)
+want = dict(RUNTIME_CONFS)
+want.update((key, value) for key, (_default, value) in SIZING_CONFS.items())
+load_table(spark, {sf!r}, "nation")
+print("RESULT", sorted(k for k, v in want.items() if spark.conf.get(k) != v))
+spark.stop()
+"""
+
+
+def test_plain_session_gets_engine_confs_on_first_load_table():
+    """A host's plain session (no engine confs, a non-UTC zone) reads
+    every RUNTIME_CONFS value and the SIZING_CONFS engine values after
+    its first load_table — the first use prepares it.  Child process,
+    because the test session must stay up."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _PLAIN_CHILD.format(repo=str(repo), sf="/root/testdata/sf0.001"),
+        ],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT")]
+    assert lines == ["RESULT []"], out.stdout[-2000:]

@@ -145,24 +145,25 @@ def test_kmeans_centroids_match_python_reference(spark, sf_dir, scale):
 
 def test_kmeans_centroids_independent_of_execution_config(spark, sf_dir, monkeypatch):
     """Bit-identical centroids across shuffle width, AQE and the table
-    cache: the id-ordered sample fixes every float sum's order."""
+    cache: the id-ordered sample fixes every float sum's order.  Each
+    cell's confs must still hold after the run, or the cell did not
+    run under them."""
     from pg_telemetry_spark.operators.ann import kmeans_centroids
 
     def centroids():
         emb = load_table(spark, sf_dir, "embeddings")
         return [(r.cell_id, list(r.cv)) for r in kmeans_centroids(emb).collect()]
 
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     base = centroids()
-    saved = {
-        key: spark.conf.get(key)
-        for key in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    }
+    saved = {key: spark.conf.get(key) for key in keys}
     try:
         for width in ("1", "7", "32"):
             for aqe in ("true", "false"):
-                spark.conf.set("spark.sql.shuffle.partitions", width)
-                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                spark.conf.set(keys[0], width)
+                spark.conf.set(keys[1], aqe)
                 assert centroids() == base, (width, aqe)
+                assert tuple(spark.conf.get(key) for key in keys) == (width, aqe)
     finally:
         for key, value in saved.items():
             spark.conf.set(key, value)
