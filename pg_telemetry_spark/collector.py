@@ -19,8 +19,8 @@ locally, JDBC/ClickHouse in production — so no warehouse driver is a
 hard dependency.
 
 Scale: ingestion parallelism = landing-file count × executor cores;
-the warehouse write is hash-bucketed by series and sorted within
-files; rollups re-aggregate sums/counts only (always composable).
+the warehouse write is hash-clustered by series, sorted within files
+and sized by AQE; rollups re-aggregate sums/counts only (composable).
 A 100 TB backfill is the same code fed a bigger directory.
 """
 
@@ -271,16 +271,18 @@ class StatViewCollector:
         # spurious zero-delta against its own rows
         prior = [b for b in self._state_batch_ids() if b < batch_id]
         if prior:
-            prev = self.spark.read.parquet(
+            # state files hold snaps' columns: no schema-inference job
+            prev = self.spark.read.schema(snaps.schema).parquet(
                 f"{self._state_dir}/batch_id={prior[-1]}"
-            ).select(*cols)
+            )
             combined = prev.unionByName(snaps)
         else:  # first batch: no previous sample exists
             combined = snaps
         inc = counter_increases(combined, keys, counters)
         # only emit increases for ticks in THIS batch (the state rows
-        # exist purely to seed the first delta of each series)
-        lo = snaps.agg(F.min("snap_ts")).collect()[0][0]
+        # exist purely to seed the first delta of each series); a
+        # scalar subquery, so no driver round trip
+        lo = snaps.agg(F.min("snap_ts")).scalar()
         inc.filter(F.col("snap_ts") >= lo).write.mode("overwrite").parquet(
             f"{self._rollup_dir}/batch_id={batch_id}"
         )

@@ -17,24 +17,19 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_telemetry_spark.warehouse.layout import write_events_warehouse
+
 
 @dataclass
 class ParquetWarehouseSink:
     """Day-partitioned Parquet warehouse, one subdir per micro-batch
-    (overwrite-by-batchId = idempotent under replays)."""
+    (overwrite-by-batchId = idempotent under replays), each written by
+    :func:`write_events_warehouse` in AQE-sized files."""
 
     path: str
-    buckets: int = 32
 
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        (
-            df.withColumn("event_date", F.col("ts").cast("date"))
-            .repartition(self.buckets, "user_id")
-            .sortWithinPartitions("user_id", "ts")
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(f"{self.path}/batch_id={batch_id}")
-        )
+        write_events_warehouse(df, f"{self.path}/batch_id={batch_id}")
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.option("basePath", self.path).parquet(f"{self.path}/batch_id=*")

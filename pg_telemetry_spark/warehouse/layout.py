@@ -4,9 +4,11 @@ MergeTree ``ORDER BY (series, ts)`` + TTL ≈ this module:
 
 - partition by ``event_date`` (directory-level pruning: a time-slice
   query touches one day's files, not 100 TB),
-- ``repartition(user_id)`` + ``sortWithinPartitions(user_id, ts)``
-  inside each partition (run-length + min-max friendly pages, so
-  per-series scans skip row groups),
+- ``repartition(user_id)`` + a ``(user_id, ts)`` sort inside each
+  file (run-length + min-max friendly pages, so per-series scans skip
+  row groups); the repartition names no count, so AQE coalesces it to
+  its advisory size: one file per day for a small batch, ~64 MB files
+  at scale, ``spark.sql.shuffle.partitions`` files when AQE is off,
 - retention = partition drop by age (a metadata operation — no
   rewrite of surviving data),
 - downsampling = hourly rollup written alongside raw (the
@@ -19,17 +21,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_events_warehouse(
-    events: DataFrame,
-    path: str,
-    buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Write events day-partitioned and series-sorted within files."""
+def write_events_warehouse(events: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write events day-partitioned; a user's rows of a day share one
+    file, sorted by ``ts``."""
     (
         events.withColumn("event_date", F.col("ts").cast("date"))
-        .repartition(buckets, "user_id")
-        .sortWithinPartitions("user_id", "ts")
+        .repartition("user_id")
+        # led by event_date: the planned write sorts each task by the
+        # partition column and would replace a sort not led by it
+        .sortWithinPartitions("event_date", "user_id", "ts")
         .write.mode(mode)
         .partitionBy("event_date")
         .parquet(path)

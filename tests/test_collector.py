@@ -290,3 +290,127 @@ def test_crash_between_sink_and_checkpoint_commit(spark, sf_dir, view):
     assert c.increases().count() == len(direct)
     assert c.raw().count() == snaps.count()
     snaps.unpersist()
+
+
+# ---------------------------------------------------------------------
+# Warehouse write sizing and layout (one events tick at sf0.001)
+# ---------------------------------------------------------------------
+
+
+def _land_events_tick(spark, sf, base):
+    """Land the first two days of the events at ``sf`` and run one
+    collector tick; returns the collector."""
+    import pathlib
+
+    events = _stream_events(spark, sf)
+    c = TelemetryCollector(
+        spark,
+        landing_dir=f"{base}/landing",
+        warehouse_dir=f"{base}/warehouse",
+        checkpoint_dir=f"{base}/ckpt",
+    )
+    pathlib.Path(f"{base}/landing").mkdir(parents=True)
+    for day in _day_batches(events, ["2024-01-01", "2024-01-02"]):
+        day.coalesce(1).write.mode("append").parquet(f"{base}/landing")
+    c.run_available()
+    return c
+
+
+def _day_files(raw_dir):
+    """``{(batch dir, day dir): [data files]}`` of a raw warehouse."""
+    import pathlib
+
+    return {
+        (d.parent.name, d.name): sorted(d.glob("part-*.parquet"))
+        for d in pathlib.Path(raw_dir).glob("batch_id=*/event_date=*")
+    }
+
+
+@pytest.fixture(scope="module")
+def sf_small(sf_dir):
+    from pathlib import Path
+
+    return str(Path(sf_dir).with_name("sf0.001"))
+
+
+@pytest.fixture(scope="module")
+def events_tick(spark, sf_small, tmp_path_factory):
+    base = tmp_path_factory.mktemp("sizing")
+    _land_events_tick(spark, sf_small, base)
+    files = _day_files(f"{base}/warehouse/raw")
+    assert len(files) == 2, f"expected two day dirs: {sorted(files)}"
+    return files
+
+
+def test_tick_writes_at_most_one_file_per_day(events_tick):
+    """The sink's repartition names no count, so AQE coalesces a small
+    tick's shuffle and each (batch, day) directory holds one file; a
+    fixed 32-way repartition wrote one file per non-empty bucket."""
+    counts = {k: len(v) for k, v in events_tick.items()}
+    assert all(n <= 1 for n in counts.values()), counts
+
+
+def test_tick_files_keep_the_series_layout(events_tick):
+    """MergeTree-like layout contract: each data file is sorted by
+    (user_id, ts), and no user's rows of a day span two files."""
+    import pyarrow.parquet as pq
+
+    for (batch, day), files in events_tick.items():
+        owner = {}
+        for f in files:
+            t = pq.read_table(f, columns=["user_id", "ts"])
+            rows = list(zip(t["user_id"].to_pylist(), t["ts"].to_pylist()))
+            assert rows == sorted(rows), f"{batch}/{day}/{f.name} not sorted"
+            for user in {u for u, _ in rows}:
+                assert owner.setdefault(user, f.name) == f.name, (
+                    f"user {user} in two files of {batch}/{day}"
+                )
+
+
+def test_collector_results_independent_of_aqe(spark, sf_small, tmp_path):
+    """The same landing through two fresh collectors, AQE off and the
+    session default, serves identical raw rows, hourly series and
+    stat-view increases; with AQE off the write falls back to the
+    shuffle width, so only the file count may differ."""
+    from pg_telemetry_spark import statviews
+    from pg_telemetry_spark.collector import StatViewCollector
+    from pg_telemetry_spark.session import scoped_confs
+    from pg_telemetry_spark.tables import load_table
+
+    def sorted_rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def served(base):
+        import pathlib
+
+        c = _land_events_tick(spark, sf_small, base)
+        snaps = statviews.DERIVATIONS["pg_stat_statements"](
+            load_table(spark, sf_small, "events")
+        )
+        cut = snaps.agg(F.min(F.col("snap_ts").cast("date"))).head()[0]
+        s = StatViewCollector(
+            spark,
+            view="pg_stat_statements",
+            landing_dir=f"{base}/snaps",
+            warehouse_dir=f"{base}/warehouse",
+            checkpoint_dir=f"{base}/snaps_ckpt",
+        )
+        pathlib.Path(f"{base}/snaps").mkdir(parents=True)
+        day = F.col("snap_ts").cast("date")
+        for part in (snaps.filter(day <= cut), snaps.filter(day > cut)):
+            part.coalesce(1).write.mode("append").parquet(f"{base}/snaps")
+            s.run_available()
+        files = _day_files(f"{base}/warehouse/raw")
+        return (
+            sorted_rows(c.raw()),
+            sorted_rows(c.hourly_series()),
+            sorted_rows(s.increases()),
+        ), max(len(v) for v in files.values())
+
+    with scoped_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
+        off, off_files = served(tmp_path / "aqe_off")
+    on, on_files = served(tmp_path / "aqe_on")
+    assert off[0] and off[1] and off[2]
+    assert off == on
+    # the AQE-off leg really ran without coalescing
+    assert off_files > 1 and on_files == 1, (off_files, on_files)

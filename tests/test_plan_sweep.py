@@ -176,3 +176,46 @@ def test_conf_changes_only_in_session_module():
         for line in _conf_changes(p.read_text())
     ]
     assert not offenders, f"conf set/unset outside session.py: {offenders}"
+
+
+def _counted_repartitions(src: str) -> list[int]:
+    """Lines of ``.repartition(...)`` calls whose first argument is not
+    a column (a string literal or a Column-building call) — a fixed
+    count, a count variable, or no argument at all."""
+
+    def by_column(call: ast.Call) -> bool:
+        first = call.args[0] if call.args else None
+        return not call.keywords and (
+            isinstance(first, ast.Call)
+            or (isinstance(first, ast.Constant) and isinstance(first.value, str))
+        )
+
+    # func.end_lineno is the ``.repartition`` line inside a chain
+    return [
+        node.func.end_lineno
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "repartition"
+        and not by_column(node)
+    ]
+
+
+def test_warehouse_writes_repartition_by_column_only():
+    """The collector's warehouse writes hash-cluster by series and let
+    AQE size the shuffle: a ``REPARTITION_BY_COL`` exchange is
+    coalesced to the advisory size, while a counted repartition is a
+    ``REPARTITION_BY_NUM`` exchange AQE never coalesces — a fixed file
+    count per tick, however small the batch."""
+    pkg = Path(__file__).resolve().parent.parent / "pg_telemetry_spark"
+    files = [
+        *sorted((pkg / "sinks").rglob("*.py")),
+        *sorted((pkg / "warehouse").rglob("*.py")),
+        pkg / "collector.py",
+    ]
+    offenders = [
+        f"{p.relative_to(pkg)}:{line}"
+        for p in files
+        for line in _counted_repartitions(p.read_text())
+    ]
+    assert not offenders, f"repartition by count in a warehouse write: {offenders}"
