@@ -13,6 +13,11 @@ Streaming job plus a warehouse layout:
       -> warehouse serves SURVEY §2's query surface
          (partition-pruned slices, deltas/rates, last-point, ...)
 
+Each tick is one ``Trigger.AvailableNow`` run through
+:func:`streaming.run_available_now`.  A local checkpoint runs on
+Spark's ``FileSystem`` checkpoint manager, whose renames fork no
+process; a remote one (HDFS, S3, ABFS) keeps Spark's default.
+
 Retention and downsampling are warehouse-side partition operations
 (warehouse/layout.py).  The sink is an interface (sinks/) — Parquet
 locally, JDBC/ClickHouse in production — so no warehouse driver is a
@@ -34,6 +39,7 @@ from pyspark.sql import types as T
 
 from pg_telemetry_spark.session import prepare_session
 from pg_telemetry_spark.sinks import ParquetWarehouseSink
+from pg_telemetry_spark.streaming import run_available_now
 
 #: Wire schema of collected telemetry rows (stat snapshots or events).
 COLLECT_SCHEMA = T.StructType(
@@ -87,13 +93,7 @@ class TelemetryCollector:
         analog; a production deployment uses a processingTime trigger
         instead — same code)."""
         stream = self.spark.readStream.schema(COLLECT_SCHEMA).parquet(self.landing_dir)
-        q = (
-            stream.writeStream.foreachBatch(self._ship)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, self._ship, self.checkpoint_dir)
 
     # -- query surface over the warehouse --------------------------------
 
@@ -323,13 +323,7 @@ class StatViewCollector:
         stream = self.spark.readStream.schema(self.schema).parquet(
             self.landing_dir
         )
-        q = (
-            stream.writeStream.foreachBatch(self._ship)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, self._ship, self.checkpoint_dir)
 
     # -- query surface ------------------------------------------------
 

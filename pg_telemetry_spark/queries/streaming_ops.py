@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import scoped_confs
+from pg_telemetry_spark.streaming import run_available_now
 from pg_telemetry_spark.streaming.harness import FileStreamHarness
 from pg_telemetry_spark.tables import load_table
 
@@ -38,6 +38,33 @@ STREAM_SCHEMA = T.StructType(
 )
 
 _COLS = [f.name for f in STREAM_SCHEMA.fields]
+
+
+def _local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """``rows`` (tuples or Rows) as a DataFrame built from an Arrow
+    table.  It plans as a ``LocalTableScan``, so reading it fires no
+    job, where a list-built frame is RDD-backed and collecting it runs
+    one task per core through Python workers.  Values go through the
+    field type's ``toInternal`` as on the list path, so a naive
+    collected datetime keeps its instant under any host time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in col] if f.needConversion() else col,
+            type=arrow_field.type,
+        )
+        for f, arrow_field, col in zip(schema.fields, arrow_schema, columns)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,13 +95,14 @@ def src_stream_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally (checkpointed offsets — each run sees only new
     files); returns per-batch row counts."""
     events = _stream_events(spark, sf_dir)
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     rows = []
-    for i, b in enumerate(_day_batches(events, ["2024-01-01", "2024-01-02", "2024-01-03"])):
-        h.add_batch(b)
-        captured = h.run_available(h.stream(), "src", output_mode="append")
-        rows.append((i, sum(len(c) for c in captured)))
-    return spark.createDataFrame(rows, "batch int, n_rows bigint")
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+        for i, b in enumerate(_day_batches(events, days)):
+            h.add_batch(b)
+            captured = h.run_available(h.stream(), "src", output_mode="append")
+            rows.append((i, sum(len(c) for c in captured)))
+    return _local_frame(spark, rows, "batch int, n_rows bigint")
 
 
 @query("str_watermark", group="streaming", tier="C")
@@ -84,7 +112,6 @@ def str_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (now far behind the 10-minute watermark) is dropped; returns the
     final per-hour counts."""
     events = _stream_events(spark, sf_dir)
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     batches = _day_batches(events, ["2024-01-01", "2024-01-02"])
     late_replay = batches[0].limit(50)  # day-1 rows arriving after day-2
 
@@ -97,14 +124,13 @@ def str_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     state: dict = {}
-    for b in [*batches, late_replay]:
-        h.add_batch(b)
-        for captured in h.run_available(agg(h.stream()), "wm", output_mode="update"):
-            for r in captured:
-                state[r.bucket] = r.n_events
-    return spark.createDataFrame(
-        sorted(state.items()), "bucket timestamp, n_events bigint"
-    )
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in [*batches, late_replay]:
+            h.add_batch(b)
+            for captured in h.run_available(agg(h.stream()), "wm", output_mode="update"):
+                for r in captured:
+                    state[r.bucket] = r.n_events
+    return _local_frame(spark, sorted(state.items()), "bucket timestamp, n_events bigint")
 
 
 @query("str_dedup", group="streaming", tier="C")
@@ -114,15 +140,15 @@ def str_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     once.  Returns per-type counts of the deduped stream."""
     events = _stream_events(spark, sf_dir)
     day1, day2 = _day_batches(events, ["2024-01-01", "2024-01-02"])
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     emitted: list = []
-    for b in [day1, day1.limit(100).unionByName(day2)]:
-        h.add_batch(b)
-        for captured in h.run_available(
-            h.stream().dropDuplicates(["event_id"]), "dedup", output_mode="append"
-        ):
-            emitted.extend(captured)
-    out = spark.createDataFrame(emitted, STREAM_SCHEMA)
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in [day1, day1.limit(100).unionByName(day2)]:
+            h.add_batch(b)
+            for captured in h.run_available(
+                h.stream().dropDuplicates(["event_id"]), "dedup", output_mode="append"
+            ):
+                emitted.extend(captured)
+    out = _local_frame(spark, emitted, STREAM_SCHEMA)
     return out.groupBy("event_type").agg(
         F.count("*").alias("n_events"), F.countDistinct("event_id").alias("n_unique")
     )
@@ -258,16 +284,16 @@ def str_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_shards = sized_shard_count(n_keys)
 
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     final: dict = {}
-    for b in (day1, day2):
-        h.add_batch(b)
-        transformed = sharded_running_agg(h.stream(), n_shards)
-        for captured in h.run_available(transformed, "stateful", output_mode="update"):
-            for r in captured:
-                final[r.user_id] = (r.n_events, r.sum_value)
-    return spark.createDataFrame(
-        [(u, n, s) for u, (n, s) in sorted(final.items())], _STATEFUL_OUT_SCHEMA
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in (day1, day2):
+            h.add_batch(b)
+            transformed = sharded_running_agg(h.stream(), n_shards)
+            for captured in h.run_available(transformed, "stateful", output_mode="update"):
+                for r in captured:
+                    final[r.user_id] = (r.n_events, r.sum_value)
+    return _local_frame(
+        spark, [(u, n, s) for u, (n, s) in sorted(final.items())], _STATEFUL_OUT_SCHEMA
     )
 
 
@@ -282,13 +308,13 @@ def str_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("user_id"),
         F.concat(F.lit("cohort_"), (F.col("id") % 5).cast("string")).alias("cohort"),
     )
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
-    h.add_batch(day1)
-    enriched = h.stream().join(F.broadcast(cohorts), "user_id")
-    captured = h.run_available(enriched, "static", output_mode="append")
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        h.add_batch(day1)
+        enriched = h.stream().join(F.broadcast(cohorts), "user_id")
+        captured = h.run_available(enriched, "static", output_mode="append")
     rows = [r for c in captured for r in c]
-    out = spark.createDataFrame(
-        [(r.cohort, r.event_id) for r in rows], "cohort string, event_id bigint"
+    out = _local_frame(
+        spark, [(r.cohort, r.event_id) for r in rows], "cohort string, event_id bigint"
     )
     return out.groupBy("cohort").agg(F.count("*").alias("n_events"))
 
@@ -303,26 +329,28 @@ def str_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches = _day_batches(events, ["2024-01-01", "2024-01-02"])
     rows = []
     for mode in ("append", "update", "complete"):
-        h = FileStreamHarness(spark, STREAM_SCHEMA)
         emitted = 0
         windows: set = set()
         n_runs = 0
-        for b in batches:
-            h.add_batch(b)
-            agg = (
-                h.stream()
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour"))
-                .agg(F.count("*").alias("n_events"))
-                .select(F.col("window.start").alias("bucket"), "n_events")
-            )
-            for captured in h.run_available(agg, f"mode_{mode}", output_mode=mode):
-                n_runs += 1
-                emitted += len(captured)
-                windows.update(r.bucket for r in captured)
+        with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+            for b in batches:
+                h.add_batch(b)
+                agg = (
+                    h.stream()
+                    .withWatermark("ts", "10 minutes")
+                    .groupBy(F.window("ts", "1 hour"))
+                    .agg(F.count("*").alias("n_events"))
+                    .select(F.col("window.start").alias("bucket"), "n_events")
+                )
+                for captured in h.run_available(agg, f"mode_{mode}", output_mode=mode):
+                    n_runs += 1
+                    emitted += len(captured)
+                    windows.update(r.bucket for r in captured)
         rows.append((mode, n_runs, emitted, len(windows)))
-    return spark.createDataFrame(
-        rows, "mode string, batches int, rows_emitted bigint, distinct_windows bigint"
+    return _local_frame(
+        spark,
+        rows,
+        "mode string, batches int, rows_emitted bigint, distinct_windows bigint",
     )
 
 
@@ -342,18 +370,12 @@ def snk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # overwrite-by-batchId = exactly-once under replays
         batch_df.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
 
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
-    for b in (day1, day2):
-        h.add_batch(b)
-        with scoped_confs(spark, h.stream_confs):
-            q = (
-                h.stream()
-                .writeStream.foreachBatch(write_warehouse)
-                .option("checkpointLocation", h.checkpoint("sink"))
-                .trigger(availableNow=True)
-                .start()
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in (day1, day2):
+            h.add_batch(b)
+            run_available_now(
+                h.stream(), write_warehouse, h.checkpoint("sink"), confs=h.stream_confs
             )
-            q.awaitTermination()
     back = spark.read.schema(STREAM_SCHEMA).parquet(f"{sink_dir}/batch_id=*")
     return back.groupBy("event_type").agg(F.count("*").alias("n_events"))
 
@@ -369,41 +391,44 @@ def str_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user match counts."""
     events = _stream_events(spark, sf_dir)
     day1, day2 = _day_batches(events, ["2024-01-01", "2024-01-02"])
-    clicks_h = FileStreamHarness(spark, STREAM_SCHEMA)
-    buys_h = FileStreamHarness(spark, STREAM_SCHEMA)
     matched: list = []
-    for b in (day1, day2):
-        clicks_h.add_batch(b.filter(F.col("event_type") == "click"))
-        buys_h.add_batch(b.filter(F.col("event_type") == "purchase"))
-        clicks = (
-            clicks_h.stream()
-            .withWatermark("ts", "30 minutes")
-            .select(
-                F.col("user_id"),
-                F.col("ts").alias("click_ts"),
-                F.col("event_id").alias("click_id"),
+    with (
+        FileStreamHarness(spark, STREAM_SCHEMA) as clicks_h,
+        FileStreamHarness(spark, STREAM_SCHEMA) as buys_h,
+    ):
+        for b in (day1, day2):
+            clicks_h.add_batch(b.filter(F.col("event_type") == "click"))
+            buys_h.add_batch(b.filter(F.col("event_type") == "purchase"))
+            clicks = (
+                clicks_h.stream()
+                .withWatermark("ts", "30 minutes")
+                .select(
+                    F.col("user_id"),
+                    F.col("ts").alias("click_ts"),
+                    F.col("event_id").alias("click_id"),
+                )
             )
-        )
-        buys = (
-            buys_h.stream()
-            .withWatermark("ts", "30 minutes")
-            .select(
-                F.col("user_id"),
-                F.col("ts").alias("buy_ts"),
-                F.col("event_id").alias("buy_id"),
+            buys = (
+                buys_h.stream()
+                .withWatermark("ts", "30 minutes")
+                .select(
+                    F.col("user_id"),
+                    F.col("ts").alias("buy_ts"),
+                    F.col("event_id").alias("buy_id"),
+                )
             )
-        )
-        joined = clicks.join(
-            buys,
-            (clicks.user_id == buys.user_id)
-            & (F.col("buy_ts") >= F.col("click_ts"))
-            & (F.col("buy_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        ).select(clicks.user_id, "click_id", "buy_id")
-        # the capture sink needs a checkpoint shared across runs; reuse
-        # the click harness's checkpoint namespace
-        for captured in clicks_h.run_available(joined, "ssjoin", output_mode="append"):
-            matched.extend(captured)
-    out = spark.createDataFrame(
+            joined = clicks.join(
+                buys,
+                (clicks.user_id == buys.user_id)
+                & (F.col("buy_ts") >= F.col("click_ts"))
+                & (F.col("buy_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+            ).select(clicks.user_id, "click_id", "buy_id")
+            # the capture sink needs a checkpoint shared across runs; reuse
+            # the click harness's checkpoint namespace
+            for captured in clicks_h.run_available(joined, "ssjoin", output_mode="append"):
+                matched.extend(captured)
+    out = _local_frame(
+        spark,
         [(r.user_id, r.click_id, r.buy_id) for r in matched],
         "user_id bigint, click_id bigint, buy_id bigint",
     )
@@ -446,13 +471,14 @@ def str_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     emitted: list = []
-    for b in (day1, day2, day3):
-        h.add_batch(b)
-        for captured in h.run_available(agg(h.stream()), "sess", output_mode="append"):
-            emitted.extend(captured)
-    out = spark.createDataFrame(
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in (day1, day2, day3):
+            h.add_batch(b)
+            for captured in h.run_available(agg(h.stream()), "sess", output_mode="append"):
+                emitted.extend(captured)
+    out = _local_frame(
+        spark,
         emitted,
         "user_id bigint, session_start timestamp, session_end timestamp, "
         "n_events bigint, sum_value double",
@@ -470,7 +496,6 @@ def str_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     knob to watch at 100 TB.  Returns the final per-window counts
     and value sums for day 1-2."""
     events = _stream_events(spark, sf_dir)
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     batches = _day_batches(events, ["2024-01-01", "2024-01-02"])
 
     def agg(stream: DataFrame) -> DataFrame:
@@ -487,12 +512,14 @@ def str_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     state: dict = {}
-    for b in batches:
-        h.add_batch(b)
-        for captured in h.run_available(agg(h.stream()), "slide", output_mode="update"):
-            for r in captured:
-                state[r.bucket] = (r.n_events, r.sum_value)
-    return spark.createDataFrame(
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in batches:
+            h.add_batch(b)
+            for captured in h.run_available(agg(h.stream()), "slide", output_mode="update"):
+                for r in captured:
+                    state[r.bucket] = (r.n_events, r.sum_value)
+    return _local_frame(
+        spark,
         [(k, *v) for k, v in sorted(state.items())],
         "bucket timestamp, n_events bigint, sum_value double",
     )
@@ -511,7 +538,6 @@ def str_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key domain, not the input; watermark expiry would bound it in a
     long-running job."""
     events = _stream_events(spark, sf_dir)
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     batches = _day_batches(events, ["2024-01-01", "2024-01-02"])
 
     def agg(stream: DataFrame) -> DataFrame:
@@ -523,12 +549,14 @@ def str_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     state: dict = {}
-    for b in batches:
-        h.add_batch(b)
-        for captured in h.run_available(agg(h.stream()), "topk", output_mode="update"):
-            for r in captured:
-                state[(r.bucket, r.event_type)] = r.n
-    final = spark.createDataFrame(
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in batches:
+            h.add_batch(b)
+            for captured in h.run_available(agg(h.stream()), "topk", output_mode="update"):
+                for r in captured:
+                    state[(r.bucket, r.event_type)] = r.n
+    final = _local_frame(
+        spark,
         [(k[0], k[1], v) for k, v in sorted(state.items())],
         "bucket timestamp, event_type string, n bigint",
     )
@@ -572,7 +600,6 @@ def str_anomaly_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     events = _stream_events(spark, sf_dir)
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
     batches = _day_batches(events, ["2024-01-01", "2024-01-02"])
 
     def agg(stream: DataFrame) -> DataFrame:
@@ -592,17 +619,19 @@ def str_anomaly_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     alerts: dict = {}
-    for b in batches:
-        h.add_batch(b)
-        for captured in h.run_available(
-            agg(h.stream()), "anom", output_mode="update"
-        ):
-            for r in captured:
-                alerts[(r.bucket, r.event_type)] = round(r.n / r.base, 6)
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        for b in batches:
+            h.add_batch(b)
+            for captured in h.run_available(
+                agg(h.stream()), "anom", output_mode="update"
+            ):
+                for r in captured:
+                    alerts[(r.bucket, r.event_type)] = round(r.n / r.base, 6)
     rows = [
         (et, b, ratio) for (b, et), ratio in sorted(alerts.items(), key=lambda kv: (kv[0][1], kv[0][0]))
     ]
-    out = spark.createDataFrame(
+    out = _local_frame(
+        spark,
         rows or [("__none__", None, 0.0)],
         "event_type string, bucket timestamp, ratio double",
     )

@@ -10,6 +10,8 @@ This module owns session configuration:
   ``spark.sql.*`` runtime confs, verified settable post-creation).
 - :func:`scoped_confs` — every temporary conf change (loop widths, the
   streaming harness): set for one block, restored on exit.
+- :func:`checkpoint_confs` — the streaming checkpoint file manager a
+  checkpoint path should run with.
 
 Required confs and why:
 
@@ -32,6 +34,7 @@ from __future__ import annotations
 import contextlib
 import math
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -297,6 +300,40 @@ def scoped_confs(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, value)
+
+
+#: Spark's checkpoint manager over the Hadoop ``FileSystem`` API.  On a
+#: local path its rename is ``File.renameTo``; the default
+#: ``FileContext`` manager calls ``FileUtil.readLink`` on every rename
+#: and status check, which forks a ``readlink`` process each time.
+FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_confs(spark: SparkSession, path: str) -> dict[str, str]:
+    """Confs for a streaming query checkpointing to ``path``.
+
+    A ``file`` checkpoint (a scheme-less path follows ``fs.defaultFS``)
+    gets :data:`FILESYSTEM_CHECKPOINT_MANAGER`: Spark already uses it
+    for every filesystem without a ``FileContext``, and one active query
+    per checkpoint means its check-then-rename has no second writer.
+    Any other scheme (HDFS, S3, ABFS) keeps Spark's default manager.
+    Decided from strings alone — no filesystem is instantiated."""
+    scheme = urlparse(path).scheme
+    if not scheme:
+        try:
+            hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+            default_fs = hadoop_conf.get("fs.defaultFS", "file:///")
+        except Exception:
+            return {}  # Spark Connect: the server's filesystem is unknown
+        scheme = urlparse(default_fs).scheme
+    if scheme != "file":
+        return {}
+    return {
+        "spark.sql.streaming.checkpointFileManagerClass": FILESYSTEM_CHECKPOINT_MANAGER
+    }
 
 
 def sized_shuffle(spark: SparkSession, partitions: int):

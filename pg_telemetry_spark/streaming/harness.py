@@ -7,6 +7,9 @@ time; each ``run_available`` call starts the stream with
 newly-landed files are processed — exactly the restart-and-catch-up
 semantics of a production collector, compressed into a test.
 
+The harness is a context manager: its landing files and checkpoints
+live under ``base_dir``, which is deleted on exit.
+
 Output is captured through ``foreachBatch`` (driver-side in local
 mode), which is also the engine's warehouse-sink seam: in production
 the capture function is replaced by ``batch_df.write.format("jdbc")``
@@ -16,6 +19,7 @@ the capture function is replaced by ``batch_df.write.format("jdbc")``
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -24,7 +28,7 @@ from typing import ClassVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pg_telemetry_spark.session import scoped_confs
+from pg_telemetry_spark.streaming import run_available_now
 
 
 def _env_stream_shuffle() -> int:
@@ -82,11 +86,18 @@ class FileStreamHarness:
     #: change and dataclass treats it as shared state, not a field.
     progress_log: ClassVar[list] = []
 
+    def __enter__(self) -> FileStreamHarness:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        shutil.rmtree(self.base_dir, ignore_errors=True)
+
     @property
     def stream_confs(self) -> dict[str, str]:
         """Shuffle/state partitioning and state-store provider for one
-        local micro-batch run — set through ``session.scoped_confs``,
-        which restores the host session's values afterwards."""
+        local micro-batch run.  :func:`streaming.run_available_now` sets
+        them, with the checkpoint file manager, for the run only and
+        restores the host session's values afterwards."""
         confs = {"spark.sql.shuffle.partitions": str(self.shuffle_partitions)}
         if self.state_store_provider:
             confs["spark.sql.streaming.stateStore.providerClass"] = (
@@ -116,23 +127,19 @@ class FileStreamHarness:
         name: str,
         output_mode: str = "update",
     ) -> list[list]:
-        """Run the stream to exhaustion (AvailableNow); return the rows
-        captured from each micro-batch as lists of Row."""
+        """Run the stream to exhaustion (AvailableNow) against the
+        checkpoint ``name``, with :attr:`stream_confs` and the
+        checkpoint's file manager (:func:`streaming.run_available_now`);
+        return the rows captured from each micro-batch as lists of Row."""
         captured: list[list] = []
 
         def capture(batch_df: DataFrame, batch_id: int) -> None:
             captured.append(batch_df.collect())
 
-        with scoped_confs(self.spark, self.stream_confs):
-            q = (
-                transformed.writeStream.foreachBatch(capture)
-                .outputMode(output_mode)
-                .option("checkpointLocation", self.checkpoint(name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            self._log_progress(name, q)
+        q = run_available_now(
+            transformed, capture, self.checkpoint(name), output_mode, self.stream_confs
+        )
+        self._log_progress(name, q)
         return captured
 
     def _log_progress(self, name: str, q) -> None:

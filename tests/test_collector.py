@@ -414,3 +414,27 @@ def test_collector_results_independent_of_aqe(spark, sf_small, tmp_path):
     assert off == on
     # the AQE-off leg really ran without coalescing
     assert off_files > 1 and on_files == 1, (off_files, on_files)
+
+
+def test_tick_runs_on_the_filesystem_checkpoint_manager(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """A tick against a local checkpoint runs its micro-batches on
+    Spark's FileSystem checkpoint manager (no ``readlink`` fork per
+    rename), and the session's own value is back after the tick."""
+    from pg_telemetry_spark.session import FILESYSTEM_CHECKPOINT_MANAGER
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    prior = spark.conf.get(key, None)
+    seen = []
+    ship = TelemetryCollector._ship
+
+    def recording_ship(self, batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(key, None))
+        ship(self, batch_df, batch_id)
+
+    monkeypatch.setattr(TelemetryCollector, "_ship", recording_ship)
+    c = _land_events_tick(spark, sf_small, tmp_path)
+    assert seen and set(seen) == {FILESYSTEM_CHECKPOINT_MANAGER}, seen
+    assert spark.conf.get(key, None) == prior
+    assert c.raw().count() > 0

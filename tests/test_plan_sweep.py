@@ -178,6 +178,36 @@ def test_conf_changes_only_in_session_module():
     assert not offenders, f"conf set/unset outside session.py: {offenders}"
 
 
+def _stream_starts(src: str) -> list[int]:
+    """Lines of ``.writeStream`` attributes and ``.trigger(...)`` calls."""
+    return [
+        node.end_lineno
+        for node in ast.walk(ast.parse(src))
+        if (isinstance(node, ast.Attribute) and node.attr == "writeStream")
+        or (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "trigger"
+        )
+    ]
+
+
+def test_streams_start_only_in_the_runner():
+    """``streaming.run_available_now`` is the one place a streaming
+    query starts, so every query runs with its checkpoint's file
+    manager and scoped confs.  A ``.writeStream`` or ``.trigger(``
+    anywhere else in the package is a second start/await copy."""
+    pkg = Path(__file__).resolve().parent.parent / "pg_telemetry_spark"
+    runner = pkg / "streaming" / "__init__.py"
+    offenders = [
+        f"{p.relative_to(pkg)}:{line}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != runner
+        for line in sorted(_stream_starts(p.read_text()))
+    ]
+    assert not offenders, f"stream started outside the runner: {offenders}"
+
+
 def _counted_repartitions(src: str) -> list[int]:
     """Lines of ``.repartition(...)`` calls whose first argument is not
     a column (a string literal or a Column-building call) — a fixed

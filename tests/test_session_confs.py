@@ -14,7 +14,9 @@ import pytest
 
 from pg_telemetry_spark import session
 from pg_telemetry_spark.session import (
+    FILESYSTEM_CHECKPOINT_MANAGER,
     SIZING_CONFS,
+    checkpoint_confs,
     prepare_session,
     scoped_confs,
     sized_shuffle,
@@ -299,3 +301,21 @@ def test_plain_session_gets_engine_confs_on_first_load_table():
     assert out.returncode == 0, out.stderr[-2000:]
     lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT")]
     assert lines == ["RESULT []"], out.stdout[-2000:]
+
+
+def test_checkpoint_confs_decide_by_scheme(spark, tmp_path):
+    """Local checkpoints get the FileSystem checkpoint manager; remote
+    schemes keep Spark's default; a scheme-less path follows
+    ``fs.defaultFS``.  Decided from strings: nothing is contacted."""
+    local = {
+        "spark.sql.streaming.checkpointFileManagerClass": FILESYSTEM_CHECKPOINT_MANAGER
+    }
+    assert checkpoint_confs(spark, str(tmp_path / "ckpt")) == local
+    assert checkpoint_confs(spark, (tmp_path / "ckpt").as_uri()) == local
+    assert checkpoint_confs(spark, "hdfs://nn:8020/ckpt") == {}
+    assert checkpoint_confs(spark, "s3a://b/ckpt") == {}
+    with scoped_confs(spark, {"fs.defaultFS": "hdfs://nn:8020"}):
+        assert checkpoint_confs(spark, "/ckpt") == {}
+        assert checkpoint_confs(spark, "file:///ckpt") == local
+    with scoped_confs(spark, {"fs.defaultFS": "file:///"}):
+        assert checkpoint_confs(spark, "ckpt") == local

@@ -535,3 +535,26 @@ def test_malformed_stream_shuffle_env_names_the_variable(spark, monkeypatch):
     monkeypatch.setenv("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "four")
     with pytest.raises(ValueError, match="PG_TELEMETRY_SPARK_STREAM_SHUFFLE"):
         FileStreamHarness(spark, STREAM_SCHEMA)
+
+
+def test_streaming_ops_remove_their_harness_dirs(spark, sf_dir):
+    """Each streaming op's harness deletes its landing files and
+    checkpoints when the op returns: no ``pgts_stream_*`` directory
+    outlives the run, and the results (built from captured rows) are
+    still readable afterwards."""
+    import glob
+    import os
+    import tempfile
+    from pathlib import Path
+
+    from pg_telemetry_spark.queries.streaming_ops import (
+        src_stream_file,
+        str_watermark,
+    )
+
+    pattern = os.path.join(tempfile.gettempdir(), "pgts_stream_*")
+    before = set(glob.glob(pattern))
+    sf = str(Path(sf_dir).with_name("sf0.001"))
+    assert str_watermark(spark, sf).count() > 0
+    assert src_stream_file(spark, sf).count() == 3
+    assert set(glob.glob(pattern)) - before == set()
