@@ -254,84 +254,6 @@ def _hyperplanes(nbits: int, dim: int, seed: int = 0) -> list[list[float]]:
     return planes
 
 
-def hyperplane_buckets(
-    vec_col: str = "embedding",
-    nbits: int = 8,
-    dim: int = 64,
-    seed: int = 0,
-):
-    """Column expression: sign-bit bucket id (0 .. 2^nbits-1) of the
-    vector against ``nbits`` fixed random hyperplanes — the classic
-    cosine-LSH signature (Charikar'02 SimHash for vectors).  All
-    JVM-side: one transform over the literal plane matrix, each plane
-    a fold dot product."""
-    planes = _hyperplanes(nbits, dim, seed)
-    plane_lit = F.array(*[F.array(*[F.lit(x) for x in row]) for row in planes])
-    v = as_double(vec_col)
-    dots = F.transform(
-        plane_lit,
-        lambda w: F.aggregate(
-            F.zip_with(v, w, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        ),
-    )
-    bits = F.array(*[F.lit(1 << p) for p in range(nbits)])
-    return F.aggregate(
-        F.zip_with(dots, bits, lambda d, bit: F.when(d >= 0, bit).otherwise(F.lit(0))),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-
-
-def lsh_ann_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    nbits: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """Approximate top-k via hyperplane-LSH bucketing with Hamming-1
-    multiprobe: each probe searches its own bucket plus the nbits
-    single-bit-flip neighbors — (nbits+1)/2^nbits of the corpus in
-    expectation instead of 100%.
-
-    The corpus side carries ONE bucket per vector (the natural
-    partition/bucketing key for a materialized index at 100 TB); only
-    the tiny probe side explodes.  The candidate join is an equi-join
-    on the bucket key — never a crossJoin.  Recall follows the cosine
-    collision bound p = 1 - theta/pi per bit; clustered real-world
-    embeddings land high, uniform random fixtures land low by
-    construction (tested with planted near-neighbors instead)."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(vec_col).alias("cv"),
-        hyperplane_buckets(vec_col, nbits=nbits, dim=dim).alias("bucket"),
-    )
-    p_bucket = hyperplane_buckets(vec_col, nbits=nbits, dim=dim)
-    multiprobe = F.array(
-        p_bucket, *[p_bucket.bitwiseXOR(F.lit(1 << b)) for b in range(nbits)]
-    )
-    p = probes.select(
-        F.col(probe_id_col),
-        as_double(vec_col).alias("pv"),
-        F.explode(multiprobe).alias("bucket"),
-    )
-    scored = (
-        p.join(c, "bucket")
-        .filter(F.col("neighbor_id") != F.col(probe_id_col))
-        .select(
-            probe_id_col,
-            "neighbor_id",
-            F.round(dot("pv", "cv"), 6).alias("sim"),
-        )
-        .dropDuplicates([probe_id_col, "neighbor_id"])
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
-
-
 def estimate_neighbor_cos(
     corpus: DataFrame,
     k: int = 5,
@@ -500,12 +422,10 @@ def _bucket_code_rows(
 ) -> DataFrame:
     """(out_id, tbl, bucket) — one row per table per vector, computed
     with ONE BLAS matmul per Arrow batch against the full (T*b, dim)
-    plane matrix.  The fold-dot JVM expression of
-    :func:`hyperplane_buckets` is the right shape for ONE table; T
-    tables of it would evaluate T*b interpreted 64-element lambda
-    chains per row (the measured 48x cliff documented on
-    :func:`assign_nearest_cell`).  Sign convention matches
-    hyperplane_buckets: dot >= 0 sets the bit."""
+    plane matrix.  A fold-dot JVM expression per plane would evaluate
+    T*b interpreted 64-element lambda chains per row (the measured 48x
+    cliff documented on :func:`assign_nearest_cell`).  Sign convention:
+    dot >= 0 sets the bit."""
     import numpy as np
     import pandas as pd
 

@@ -3,7 +3,7 @@
 This module owns session configuration:
 
 - :func:`get_session` — build a local session (tests, bench); its
-  builder sets only static confs.
+  builder sets only static confs (:data:`STATIC_CONFS`).
 - :func:`prepare_session` — apply the runtime-settable required confs
   to an EXISTING session, once per session object (the driver owns the
   session for the ``__spark_entry__`` contract; these confs are all
@@ -27,6 +27,16 @@ Required confs and why:
   coalescing and skew-join splitting are the scale story for the
   100 TB target; local shuffle partitions stay modest and AQE
   coalesces further.
+
+Static confs and why (read once when the JVM starts, so only a
+session builder can set them; a host that builds its own session sets
+them in its deployment, see SCALE.md):
+
+- ``spark.sql.codegen.cache.maxEntries=1000`` — the engine serves
+  repeated queries, and Spark's generated-class cache is an LRU of 100
+  entries by default.  One ``dashboard`` pass needs about 220 classes,
+  and a cyclic scan over a smaller LRU misses every time: every pass
+  recompiled every class.
 """
 
 from __future__ import annotations
@@ -57,6 +67,18 @@ RUNTIME_CONFS: dict[str, str] = {
     # moved ~+20% box noise only); no row's seconds improved from the
     # task savings.  Guide §1.2: config only after algorithm — the
     # loop widths are sized structurally instead (loop_sizing).
+}
+
+#: Static confs :func:`get_session`'s builder applies (see the module
+#: docstring); Spark ignores them on a session that already exists.
+STATIC_CONFS: dict[str, str] = {
+    # Generated-class LRU, about 4.5x one dashboard pass.  Measured at
+    # sf0.01 on a 4-core box through CodegenMetrics: at the default 100
+    # entries every steady dashboard pass ran 192-217 Janino compiles
+    # (about 7 ms each) and a stream pass 44-55; at 1000, 0-10 and 4-6.
+    # After a full sf0.001 registry sweep Metaspace read 216.4 MB at
+    # the default and 219.0 MB here.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 #: Engine join/shuffle sizing for HOST sessions (the driver's plain
@@ -426,7 +448,8 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
     """Build (or fetch) a local session configured for the engine.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all).
-    The builder sets only static confs; every engine conf comes from
+    The builder sets only static confs (:data:`STATIC_CONFS` and the
+    driver's memory and UI); every engine conf comes from
     :func:`prepare_session`, as on a host's plain session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -445,6 +468,7 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
         # assumption — the box has 128 GiB.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config(map=STATIC_CONFS)
     )
     if not master.startswith("local["):
         # separate executor processes: size their heaps explicitly

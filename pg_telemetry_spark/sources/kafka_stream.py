@@ -3,11 +3,12 @@
 Telemetry collectors commonly ship snapshots through a message queue
 rather than writing storage directly; in Spark that ingest is the
 built-in ``kafka`` streaming source.  No broker (and no kafka
-connector jar) exists in this container, so the module exposes the
-fully-configured reader builder plus the payload-decoding transform —
-the transform is pure DataFrame logic, so it IS exercised, against
+connector jar) exists here, so the module holds the payload-decoding
+transform: it is pure DataFrame logic, so it IS exercised, against
 fixture rows shaped like Kafka records (key/value binary, topic,
-partition, offset, timestamp).
+partition, offset, timestamp).  The reader is Spark's own
+``readStream.format("kafka")`` with ``subscribe``,
+``startingOffsets`` and ``maxOffsetsPerTrigger`` set.
 
 Scale notes: Spark parallelizes a Kafka scan by topic-partition —
 provision at least as many partitions as target executor cores.
@@ -21,7 +22,7 @@ transport, which is why it is factored apart from the reader.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 #: Typed event payload carried in the Kafka record value (JSON).
@@ -34,24 +35,6 @@ EVENT_PAYLOAD_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
-
-
-def kafka_reader(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    max_offsets_per_trigger: int = 100_000,
-):
-    """Configured Kafka streaming reader (call ``.load()`` where a
-    broker and the kafka connector jar are present)."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-        .option("failOnDataLoss", "false")
-    )
 
 
 def decode_events(records: DataFrame) -> DataFrame:

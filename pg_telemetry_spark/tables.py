@@ -447,9 +447,3 @@ def load_events_sliced(
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load all fixture tables as a dict name -> DataFrame."""
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (the SQL surface)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

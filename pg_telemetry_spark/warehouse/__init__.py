@@ -1,3 +1,3 @@
 """Warehouse storage layout — the ClickHouse-MergeTree analog on
-Parquet: day-partitioned, key-sorted files with retention and rollup.
+Parquet: day-partitioned, key-sorted files with retention.
 """

@@ -1,4 +1,4 @@
-"""Partitioned, sorted warehouse writer + retention + rollup.
+"""Partitioned, sorted warehouse writer + retention.
 
 MergeTree ``ORDER BY (series, ts)`` + TTL ≈ this module:
 
@@ -10,9 +10,7 @@ MergeTree ``ORDER BY (series, ts)`` + TTL ≈ this module:
   its advisory size: one file per day for a small batch, ~64 MB files
   at scale, ``spark.sql.shuffle.partitions`` files when AQE is off,
 - retention = partition drop by age (a metadata operation — no
-  rewrite of surviving data),
-- downsampling = hourly rollup written alongside raw (the
-  materialized-view analog; sum/count compose, avg derived at read).
+  rewrite of surviving data).
 """
 
 from __future__ import annotations
@@ -54,19 +52,3 @@ def drop_partitions_older_than(spark: SparkSession, path: str, cutoff_date: str)
             shutil.rmtree(part)
             dropped += 1
     return dropped
-
-
-def write_hourly_rollup(events: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Hourly pre-aggregation rollup (re-aggregable: sum/count only)."""
-    (
-        events.groupBy(
-            F.date_trunc("hour", "ts").cast("timestamp_ntz").alias("bucket"),
-            "user_id",
-            "event_type",
-        )
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        .withColumn("event_date", F.col("bucket").cast("date"))
-        .write.mode(mode)
-        .partitionBy("event_date")
-        .parquet(path)
-    )

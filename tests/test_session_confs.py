@@ -5,7 +5,9 @@ session object and never again, so a conf the caller changes after
 first use survives every later load_table.  Within that first call,
 required confs are always applied and SIZING confs are defaults-only,
 so a deliberate site config is never overridden.  scoped_confs is the
-one save/set/restore helper for temporary conf changes.
+one save/set/restore helper for temporary conf changes.  get_session
+applies the static confs, among them a generated-class cache sized to
+the engine's working set.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from pg_telemetry_spark import session
 from pg_telemetry_spark.session import (
     FILESYSTEM_CHECKPOINT_MANAGER,
     SIZING_CONFS,
+    STATIC_CONFS,
     checkpoint_confs,
     prepare_session,
     scoped_confs,
@@ -319,3 +322,46 @@ def test_checkpoint_confs_decide_by_scheme(spark, tmp_path):
         assert checkpoint_confs(spark, "file:///ckpt") == local
     with scoped_confs(spark, {"fs.defaultFS": "file:///"}):
         assert checkpoint_confs(spark, "ckpt") == local
+
+
+def test_get_session_sets_every_static_conf(spark):
+    assert {key: spark.conf.get(key, None) for key in STATIC_CONFS} == STATIC_CONFS
+
+
+#: Deterministic reader queries whose generated classes together
+#: outnumber Spark's default 100-entry cache: at that size every
+#: second round recompiled about 110 of them.  Left out: queries that
+#: compile a few new classes in some rounds whatever the cache size
+#: (``join_multiway``, the curation queries).
+_REPEATED_MIX = (
+    "pgw_stmt_top_delta",
+    "ts_session",
+    "flagship_hourly_top20",
+    "win_lag_delta",
+    "agg_group_hash",
+    "dq_constraints",
+)
+
+
+def _codegen_compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_query_mix_reuses_generated_classes(spark, sf_dir):
+    """A second round of the same queries finds its generated classes
+    in Spark's cache instead of compiling them again: an LRU smaller
+    than the working set misses on every cyclic pass."""
+    from pg_telemetry_spark.registry import all_queries
+
+    reg = all_queries()
+
+    def one_round():
+        for name in _REPEATED_MIX:
+            reg[name].fn(spark, sf_dir).collect()
+
+    one_round()
+    before = _codegen_compiles(spark)
+    one_round()
+    compiles = _codegen_compiles(spark) - before
+    assert compiles <= 5, f"{compiles} classes recompiled on the second round"

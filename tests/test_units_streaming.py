@@ -26,44 +26,44 @@ def _mk_events(spark, rows):
 
 def test_watermark_drops_late_rows(spark):
     """A row older than watermark - delay must not update its window."""
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
 
-    def agg(stream):
-        return (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("window.start").alias("bucket"), "n")
-        )
+        def agg(stream):
+            return (
+                stream.withWatermark("ts", "10 minutes")
+                .groupBy(F.window("ts", "1 hour"))
+                .agg(F.count("*").alias("n"))
+                .select(F.col("window.start").alias("bucket"), "n")
+            )
 
-    # batch 1: two rows in hour 0, watermark -> 12:00-ish
-    h.add_batch(_mk_events(spark, [(1, 0, 1, "click", 1.0), (2, 50, 1, "click", 1.0)]))
-    h.run_available(agg(h.stream()), "late", output_mode="update")
-    # batch 2: advance event time to hour 12 => watermark ~ 11:50
-    h.add_batch(_mk_events(spark, [(3, 720, 1, "click", 1.0)]))
-    h.run_available(agg(h.stream()), "late", output_mode="update")
-    # batch 3: a late hour-0 row, far behind the watermark -> dropped
-    h.add_batch(_mk_events(spark, [(4, 30, 1, "click", 1.0)]))
-    captured = h.run_available(agg(h.stream()), "late", output_mode="update")
-    hour0 = dt.datetime(2024, 1, 1, 0, 0)
-    updates = [r for c in captured for r in c if r.bucket == hour0]
-    assert updates == [], f"late row updated a closed window: {updates}"
+        # batch 1: two rows in hour 0, watermark -> 12:00-ish
+        h.add_batch(_mk_events(spark, [(1, 0, 1, "click", 1.0), (2, 50, 1, "click", 1.0)]))
+        h.run_available(agg(h.stream()), "late", output_mode="update")
+        # batch 2: advance event time to hour 12 => watermark ~ 11:50
+        h.add_batch(_mk_events(spark, [(3, 720, 1, "click", 1.0)]))
+        h.run_available(agg(h.stream()), "late", output_mode="update")
+        # batch 3: a late hour-0 row, far behind the watermark -> dropped
+        h.add_batch(_mk_events(spark, [(4, 30, 1, "click", 1.0)]))
+        captured = h.run_available(agg(h.stream()), "late", output_mode="update")
+        hour0 = dt.datetime(2024, 1, 1, 0, 0)
+        updates = [r for c in captured for r in c if r.bucket == hour0]
+        assert updates == [], f"late row updated a closed window: {updates}"
 
 
 def test_streaming_dedup_emits_each_id_once(spark, sf_dir):
     events = _stream_events(spark, sf_dir)
     day1, day2 = _day_batches(events, ["2024-01-01", "2024-01-02"])
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
-    emitted = []
-    for b in [day1, day1.limit(100).unionByName(day2)]:
-        h.add_batch(b)
-        for captured in h.run_available(
-            h.stream().dropDuplicates(["event_id"]), "d", output_mode="append"
-        ):
-            emitted.extend(captured)
-    ids = [r.event_id for r in emitted]
-    assert len(ids) == len(set(ids)), "dedup emitted an event_id twice"
-    assert len(ids) == day1.unionByName(day2).select("event_id").distinct().count()
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        emitted = []
+        for b in [day1, day1.limit(100).unionByName(day2)]:
+            h.add_batch(b)
+            for captured in h.run_available(
+                h.stream().dropDuplicates(["event_id"]), "d", output_mode="append"
+            ):
+                emitted.extend(captured)
+        ids = [r.event_id for r in emitted]
+        assert len(ids) == len(set(ids)), "dedup emitted an event_id twice"
+        assert len(ids) == day1.unionByName(day2).select("event_id").distinct().count()
 
 
 def test_stateful_counts_match_batch_groupby(spark, sf_dir):
@@ -92,23 +92,23 @@ def test_foreachbatch_sink_idempotent_on_replay(spark, sf_dir):
     events = _stream_events(spark, sf_dir)
     (day1,) = _day_batches(events, ["2024-01-01"])
     sink = tempfile.mkdtemp(prefix="pgts_idem_")
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
-    h.add_batch(day1)
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        h.add_batch(day1)
 
-    def writer(batch_df, batch_id):
-        batch_df.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
+        def writer(batch_df, batch_id):
+            batch_df.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
 
-    for _ in range(2):  # second run: no new files, replays nothing new
-        q = (
-            h.stream()
-            .writeStream.foreachBatch(writer)
-            .option("checkpointLocation", h.checkpoint("idem"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    back = spark.read.schema(STREAM_SCHEMA).parquet(f"{sink}/batch_id=*")
-    assert back.count() == day1.count()
+        for _ in range(2):  # second run: no new files, replays nothing new
+            q = (
+                h.stream()
+                .writeStream.foreachBatch(writer)
+                .option("checkpointLocation", h.checkpoint("idem"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        back = spark.read.schema(STREAM_SCHEMA).parquet(f"{sink}/batch_id=*")
+        assert back.count() == day1.count()
 
 
 def test_streaming_sessions_match_batch_gaps_and_islands(spark, sf_dir):
@@ -286,25 +286,25 @@ def test_rocksdb_state_store_engages(spark):
     checkpoint must carry RocksDB artifacts, not just the conf."""
     from pathlib import Path
 
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
-    assert "RocksDBStateStoreProvider" in h.state_store_provider
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        assert "RocksDBStateStoreProvider" in h.state_store_provider
 
-    def agg(stream):
-        return stream.groupBy("user_id").agg(F.count("*").alias("n"))
+        def agg(stream):
+            return stream.groupBy("user_id").agg(F.count("*").alias("n"))
 
-    h.add_batch(_mk_events(spark, [(1, 0, 1, "click", 1.0), (2, 5, 2, "view", 1.0)]))
-    h.run_available(agg(h.stream()), "rocks", output_mode="update")
-    # RocksDB checkpoints write per-partition zip/changelog files under
-    # state/<op>/<part>/ — the default HDFS provider writes .delta files
-    state = Path(h.checkpoint("rocks")) / "state"
-    files = [p.name for p in state.rglob("*") if p.is_file()]
-    assert files, f"no state files under {state}"
-    assert any(f.endswith(".zip") or "rocksdb" in f.lower() for f in files), (
-        f"no RocksDB artifacts in state dir: {sorted(set(files))[:10]}"
-    )
-    assert not any(f.endswith(".delta") for f in files), (
-        "HDFS-provider .delta files present — RocksDB conf did not engage"
-    )
+        h.add_batch(_mk_events(spark, [(1, 0, 1, "click", 1.0), (2, 5, 2, "view", 1.0)]))
+        h.run_available(agg(h.stream()), "rocks", output_mode="update")
+        # RocksDB checkpoints write per-partition zip/changelog files under
+        # state/<op>/<part>/ — the default HDFS provider writes .delta files
+        state = Path(h.checkpoint("rocks")) / "state"
+        files = [p.name for p in state.rglob("*") if p.is_file()]
+        assert files, f"no state files under {state}"
+        assert any(f.endswith(".zip") or "rocksdb" in f.lower() for f in files), (
+            f"no RocksDB artifacts in state dir: {sorted(set(files))[:10]}"
+        )
+        assert not any(f.endswith(".delta") for f in files), (
+            "HDFS-provider .delta files present — RocksDB conf did not engage"
+        )
 
 
 def test_topk_windowed_final_state_matches_batch_topk(spark, sf_dir):
@@ -452,32 +452,32 @@ def test_transform_with_state_successor_api(spark, sf_dir):
 
     events = _stream_events(spark, sf_dir)
     day1, day2 = _day_batches(events, ["2024-01-01", "2024-01-02"])
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
-    out_schema = "user_id bigint, n_events bigint, sum_value double"
-    final: dict = {}
-    for b in (day1, day2):
-        h.add_batch(b)
-        t = (
-            h.stream()
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=RunningAgg(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        out_schema = "user_id bigint, n_events bigint, sum_value double"
+        final: dict = {}
+        for b in (day1, day2):
+            h.add_batch(b)
+            t = (
+                h.stream()
+                .groupBy("user_id")
+                .transformWithStateInPandas(
+                    statefulProcessor=RunningAgg(),
+                    outputStructType=out_schema,
+                    outputMode="Update",
+                    timeMode="None",
+                )
             )
-        )
-        for captured in h.run_available(t, "tws", output_mode="update"):
-            for r in captured:
-                final[r.user_id] = r.n_events
-    expected = {
-        r.user_id: r.n
-        for r in day1.unionByName(day2)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert final == expected
+            for captured in h.run_available(t, "tws", output_mode="update"):
+                for r in captured:
+                    final[r.user_id] = r.n_events
+        expected = {
+            r.user_id: r.n
+            for r in day1.unionByName(day2)
+            .groupBy("user_id")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        assert final == expected
 
 
 def test_stateful_counts_null_value_rows(spark, tmp_path):

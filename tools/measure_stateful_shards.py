@@ -63,36 +63,36 @@ def _run_leg(spark, n_keys: int, n_shards: int) -> dict:
     half = n_keys  # rows per batch (events_per_key=2)
     b1 = events.filter(F.col("event_id") < half)
     b2 = events.filter(F.col("event_id") >= half)
-    h = FileStreamHarness(spark, STREAM_SCHEMA)
-    mark = len(FileStreamHarness.progress_log)
-    t0 = time.perf_counter()
-    emitted = 0
-    for b in (b1, b2):
-        h.add_batch(b)
-        for captured in h.run_available(
-            sharded_running_agg(h.stream(), n_shards), "shards", output_mode="update"
-        ):
-            emitted += len(captured)
-    wall = time.perf_counter() - t0
-    state_rows = 0
-    for entry in FileStreamHarness.progress_log[mark:]:
-        for batch in entry["batches"]:
-            state_rows = max(state_rows, batch["state_rows"] or 0)
-    # the DURABLE state footprint: sum of the checkpoint's state files
-    # (RocksDB's memoryUsedBytes only reports the un-flushed memtable,
-    # which reads ~0 after a flush — useless as a size metric here)
-    state_dir = Path(h.checkpoint("shards")) / "state"
-    state_bytes = sum(p.stat().st_size for p in state_dir.rglob("*") if p.is_file())
-    return {
-        "n_keys": n_keys,
-        "n_shards": n_shards,
-        "keys_per_shard": -(-n_keys // n_shards),
-        "state_rows": state_rows,
-        "state_ckpt_bytes": state_bytes,
-        "bytes_per_shard_row": round(state_bytes / max(1, state_rows)),
-        "emitted_rows": emitted,
-        "wall_sec": round(wall, 2),
-    }
+    with FileStreamHarness(spark, STREAM_SCHEMA) as h:
+        mark = len(FileStreamHarness.progress_log)
+        t0 = time.perf_counter()
+        emitted = 0
+        for b in (b1, b2):
+            h.add_batch(b)
+            for captured in h.run_available(
+                sharded_running_agg(h.stream(), n_shards), "shards", output_mode="update"
+            ):
+                emitted += len(captured)
+        wall = time.perf_counter() - t0
+        state_rows = 0
+        for entry in FileStreamHarness.progress_log[mark:]:
+            for batch in entry["batches"]:
+                state_rows = max(state_rows, batch["state_rows"] or 0)
+        # the DURABLE state footprint: sum of the checkpoint's state files
+        # (RocksDB's memoryUsedBytes only reports the un-flushed memtable,
+        # which reads ~0 after a flush — useless as a size metric here)
+        state_dir = Path(h.checkpoint("shards")) / "state"
+        state_bytes = sum(p.stat().st_size for p in state_dir.rglob("*") if p.is_file())
+        return {
+            "n_keys": n_keys,
+            "n_shards": n_shards,
+            "keys_per_shard": -(-n_keys // n_shards),
+            "state_rows": state_rows,
+            "state_ckpt_bytes": state_bytes,
+            "bytes_per_shard_row": round(state_bytes / max(1, state_rows)),
+            "emitted_rows": emitted,
+            "wall_sec": round(wall, 2),
+        }
 
 
 def main() -> None:

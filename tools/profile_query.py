@@ -29,7 +29,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from pg_telemetry_spark.session import RUNTIME_CONFS  # noqa: E402
+from pg_telemetry_spark.session import STATIC_CONFS, prepare_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 MODE = os.environ.get("SPARK_GRAFT_BENCH_MODE", "collect")
@@ -37,21 +37,20 @@ REPEATS = int(os.environ.get("SPARK_GRAFT_PROFILE_REPEATS", "2"))
 
 
 def build_session() -> SparkSession:
+    """get_session's session (static confs at build, engine confs from
+    prepare_session) with the UI on for the REST API."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    b = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("pg_telemetry_spark-profile")
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4050")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config(map=STATIC_CONFS)
+        .getOrCreate()
     )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return prepare_session(spark)
 
 
 def rest(spark: SparkSession, path: str):
