@@ -59,7 +59,6 @@ class TelemetryCollector:
     landing_dir: str
     warehouse_dir: str
     checkpoint_dir: str
-    rollup: bool = True
     _sink: ParquetWarehouseSink = field(init=False)
 
     def __post_init__(self) -> None:
@@ -72,19 +71,18 @@ class TelemetryCollector:
         batch_df.persist()
         try:
             self._sink.write_batch(batch_df, batch_id)
-            if self.rollup:
-                (
-                    batch_df.groupBy(
-                        F.date_trunc("hour", "ts").alias("bucket"),
-                        "user_id",
-                        "event_type",
-                    )
-                    .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-                    .withColumn("event_date", F.col("bucket").cast("date"))
-                    .write.mode("overwrite")
-                    .partitionBy("event_date")
-                    .parquet(f"{self.warehouse_dir}/rollup_1h/batch_id={batch_id}")
+            (
+                batch_df.groupBy(
+                    F.date_trunc("hour", "ts").alias("bucket"),
+                    "user_id",
+                    "event_type",
                 )
+                .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
+                .withColumn("event_date", F.col("bucket").cast("date"))
+                .write.mode("overwrite")
+                .partitionBy("event_date")
+                .parquet(f"{self.warehouse_dir}/rollup_1h/batch_id={batch_id}")
+            )
         finally:
             batch_df.unpersist()
 

@@ -31,35 +31,17 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pg_telemetry_spark.session import ckpt_lazy, loop_sizing
+from pg_telemetry_spark.session import LOOP_BROADCAST_CAP, ckpt_lazy, loop_sizing
 from pg_telemetry_spark.cache import pin
 from pg_telemetry_spark.registry import query
 from pg_telemetry_spark.tables import load_table
 
-#: Per-round broadcast gate for the iterative ops (optimization r16,
-#: guide §3.1/§2.4).  Each round of PageRank / label propagation /
-#: BFS / k-core joins the (persisted) edge list against a per-VERTEX
-#: frame (ranks, labels, frontier, survivor set).  As a shuffle join
-#: that re-exchanges the edge list every round — measured at sf0.1:
-#: wl_pagerank ran 46 jobs / 679 tasks for 8 rounds, most of them
-#: exchange-materialization stages over an unchanged edge table.
-#: Broadcasting the per-vertex side instead streams the edges through
-#: a BroadcastHashJoin, leaving ONE shuffle per round (the
-#: destination-keyed aggregation / distinct that the algorithm
-#: fundamentally requires).  The hint is gated on the measured vertex
-#: count: 5M rows of (long, double) is ~80 MB framed — comfortably
-#: inside executor memory and far under Spark's 8 GB / 512M-row
-#: broadcast cap — while a bigger graph falls back to the old
-#: shuffle-join plan unchanged.  At 100 TB the vertex set exceeds the
-#: gate and the fallback is exercised; the bound is data-derived, not
-#: a local-mode constant.
-_BCAST_VERTEX_CAP = 5_000_000
-
 
 def _vertex_side(df: DataFrame, n_vertices: int) -> DataFrame:
     """Broadcast-hint a per-vertex round frame when it is provably
-    small (see _BCAST_VERTEX_CAP); otherwise return it unchanged."""
-    return F.broadcast(df) if n_vertices <= _BCAST_VERTEX_CAP else df
+    small (see session.LOOP_BROADCAST_CAP); otherwise return it
+    unchanged."""
+    return F.broadcast(df) if n_vertices <= LOOP_BROADCAST_CAP else df
 
 _MONTH_LO = "1997-03-01"
 _MONTH_HI = "1997-04-01"
@@ -235,7 +217,7 @@ def wl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = deg.select("u", F.lit(1.0 / n_v).alias("rank"))
     edges_deg = sym.join(deg, "u").persist()
     # Optimization r16: the per-round join ships the RANKS side as a
-    # broadcast (gated on the measured n_v, see _BCAST_VERTEX_CAP) so
+    # broadcast (gated on the measured n_v, see LOOP_BROADCAST_CAP) so
     # the persisted edge table is never re-exchanged — each round is
     # then exactly ONE shuffle (the destination groupBy), and the
     # shuffle itself is capped by sized_shuffle (per-round state is
@@ -245,9 +227,9 @@ def wl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plans/r16/wl_pagerank_{before,after}.txt).  Optimization r17
     # (VERDICT r16 #1): the cap is DERIVED from the measured n_v and
     # only applies in the broadcast-gated regime — past
-    # _BCAST_VERTEX_CAP the loop falls back to sort-merge rounds and
+    # LOOP_BROADCAST_CAP the loop falls back to sort-merge rounds and
     # runs under the session conf with AQE skew handling intact.
-    with loop_sizing(spark, n_v, small_cap=_BCAST_VERTEX_CAP):
+    with loop_sizing(spark, n_v):
         for _ in range(8):
             contribs = (
                 edges_deg.join(_vertex_side(ranks, n_v), "u")
@@ -312,7 +294,7 @@ def wl_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width from the measured n_v, AQE-off only inside the
     # broadcast-gated regime — see session.loop_sizing).
     n_v = labels.count()
-    with loop_sizing(sym.sparkSession, n_v, small_cap=_BCAST_VERTEX_CAP):
+    with loop_sizing(sym.sparkSession, n_v):
         for _ in range(5):
             nbr = sym.join(
                 _vertex_side(labels.select(F.col("u").alias("v"), "label"), n_v),
@@ -380,7 +362,7 @@ def wl_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graphs well before the documented 5M-vertex cap (ADVICE r16);
     # the loop width is derived from the measured edge-row count and
     # the cap is scoped to the broadcast regime (VERDICT r16 #1).
-    with loop_sizing(sym.sparkSession, n_prev, small_cap=_BCAST_VERTEX_CAP):
+    with loop_sizing(sym.sparkSession, n_prev):
         for _ in range(30):
             deg = sym.groupBy("u").agg(F.count("*").alias("d"))
             keep = deg.filter(F.col("d") >= k).select("u")
@@ -441,7 +423,7 @@ def wl_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     visited = src.select("u", F.lit(0).alias("hop")).transform(ckpt_lazy)
     frontier = visited.select("u")
-    with loop_sizing(sym.sparkSession, n_v, small_cap=_BCAST_VERTEX_CAP):
+    with loop_sizing(sym.sparkSession, n_v):
         for hop in range(1, 11):
             nxt = (
                 sym.join(_vertex_side(frontier, n_v), "u", "left_semi")

@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 
 from pg_telemetry_spark.registry import query
 from pg_telemetry_spark.streaming import run_available_now
-from pg_telemetry_spark.streaming.harness import FileStreamHarness
+from pg_telemetry_spark.streaming.harness import STREAM_CONFS, FileStreamHarness
 from pg_telemetry_spark.tables import load_table
 
 #: Streaming event schema: TimestampType (not ntz) — watermarks track
@@ -169,8 +169,8 @@ SHARD_FLOOR = 64
 def sized_shard_count(n_keys: int) -> int:
     """Shards for a corpus with ``n_keys`` distinct state keys:
     max(SHARD_FLOOR, ceil(n_keys / SHARD_TARGET_KEYS)).  Measured
-    (tools/measure_stateful_shards.py, STATEFUL_SHARDS.json): at the
-    64 floor a 5M-key stream holds 78k keys/shard = 643 KB per
+    (tools/measure_stateful_shards.py at 53d81e8, STATEFUL_SHARDS.json):
+    at the 64 floor a 5M-key stream holds 78k keys/shard = 643 KB per
     durable state row; the rule sizes it to 100 shards / <=50k keys
     = 450 KB rows at flat wall time (71.1 vs 69.8 s).  The linear
     growth is the point: at 1B keys the floor would build ~125 MB
@@ -183,9 +183,7 @@ def sized_shard_count(n_keys: int) -> int:
 
 def _sharded_running_update(key, pdfs, state):
     """Per-SHARD GroupState update: users' running (n, sum) pairs as
-    parallel arrays, one vectorized pandas groupby per batch.  Module-
-    level so the sf10 ladder / shard-sizing tools drive the exact
-    shipped kernel."""
+    parallel arrays, one vectorized pandas groupby per batch."""
     import pandas as pd
 
     if state.exists:
@@ -374,7 +372,7 @@ def snk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in (day1, day2):
             h.add_batch(b)
             run_available_now(
-                h.stream(), write_warehouse, h.checkpoint("sink"), confs=h.stream_confs
+                h.stream(), write_warehouse, h.checkpoint("sink"), confs=STREAM_CONFS
             )
     back = spark.read.schema(STREAM_SCHEMA).parquet(f"{sink_dir}/batch_id=*")
     return back.groupBy("event_type").agg(F.count("*").alias("n_events"))

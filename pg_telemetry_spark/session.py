@@ -262,6 +262,26 @@ LOOP_WIDTH_FLOOR = 8
 #: — small, because a round's wall-clock is its slowest partition.
 LOOP_ROWS_PER_PARTITION = 250_000
 
+#: Per-round broadcast gate for the iterative ops, and the bound of
+#: :func:`loop_sizing`'s small regime (optimization r16, guide
+#: §3.1/§2.4).  Each round of PageRank / label propagation /
+#: BFS / k-core joins the (persisted) edge list against a per-VERTEX
+#: frame (ranks, labels, frontier, survivor set).  As a shuffle join
+#: that re-exchanges the edge list every round — measured at sf0.1:
+#: wl_pagerank ran 46 jobs / 679 tasks for 8 rounds, most of them
+#: exchange-materialization stages over an unchanged edge table.
+#: Broadcasting the per-vertex side instead streams the edges through
+#: a BroadcastHashJoin, leaving ONE shuffle per round (the
+#: destination-keyed aggregation / distinct that the algorithm
+#: fundamentally requires).  The hint is gated on the measured vertex
+#: count: 5M rows of (long, double) is ~80 MB framed — comfortably
+#: inside executor memory and far under Spark's 8 GB / 512M-row
+#: broadcast cap — while a bigger graph falls back to the old
+#: shuffle-join plan unchanged.  At 100 TB the vertex set exceeds the
+#: gate and the fallback is exercised; the bound is data-derived, not
+#: a local-mode constant.
+LOOP_BROADCAST_CAP = 5_000_000
+
 
 def loop_shuffle_width(spark: SparkSession, n_rows: int) -> int:
     """Shuffle width for a bounded iterative loop, derived from the
@@ -282,27 +302,26 @@ def loop_shuffle_width(spark: SparkSession, n_rows: int) -> int:
     return min(want, hi)
 
 
-def loop_sizing(spark: SparkSession, n_rows: int, small_cap: int = 5_000_000):
+def loop_sizing(spark: SparkSession, n_rows: int):
     """Shuffle context for a bounded iterative loop BODY, chosen from
     the measured state/edge row count (optimization r17; VERDICT r16
     #1 and ADVICE r16 #1).
 
-    - ``n_rows <= small_cap`` (the regime where the loops' per-round
-      joins are explicitly broadcast-gated and fixed-shape): cap the
-      shuffle width at :func:`loop_shuffle_width` and disable AQE —
-      its runtime re-planning contributes nothing to a pinned-shape
-      round while every query stage it materializes is a blocking job
-      (measured r16: wl_pagerank 29→19 jobs, 3.7→2.8 s).
+    - ``n_rows <= LOOP_BROADCAST_CAP`` (the regime where the loops'
+      per-round joins are explicitly broadcast-gated and fixed-shape):
+      cap the shuffle width at :func:`loop_shuffle_width` and disable
+      AQE — its runtime re-planning contributes nothing to a
+      pinned-shape round while every query stage it materializes is a
+      blocking job (measured r16: wl_pagerank 29→19 jobs, 3.7→2.8 s).
     - larger graphs (the 100 TB fallback path, where the per-round
       joins fall back to sort-merge): leave the session conf and AQE
       UNTOUCHED — skew-join splitting and partition coalescing are
       the scale story there, and any fixed cap would serialize the
       cluster.
 
-    Callers pass the same gate value that drives their broadcast
-    hint (e.g. ``_BCAST_VERTEX_CAP``) so the AQE-off regime and the
-    broadcast regime coincide."""
-    if int(n_rows) <= small_cap:
+    The loops' broadcast hints gate on the same constant, so the
+    AQE-off regime and the broadcast regime coincide."""
+    if int(n_rows) <= LOOP_BROADCAST_CAP:
         return sized_shuffle(spark, loop_shuffle_width(spark, n_rows))
     return contextlib.nullcontext()
 

@@ -7,8 +7,9 @@ time; each ``run_available`` call starts the stream with
 newly-landed files are processed — exactly the restart-and-catch-up
 semantics of a production collector, compressed into a test.
 
-The harness is a context manager: its landing files and checkpoints
-live under ``base_dir``, which is deleted on exit.
+The harness is a context manager: entering it makes ``base_dir``,
+which holds its landing files and checkpoints, and leaving it deletes
+that directory.  A harness that is never entered touches no disk.
 
 Output is captured through ``foreachBatch`` (driver-side in local
 mode), which is also the engine's warehouse-sink seam: in production
@@ -18,12 +19,10 @@ the capture function is replaced by ``batch_df.write.format("jdbc")``
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
-from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -31,79 +30,50 @@ from pyspark.sql import types as T
 from pg_telemetry_spark.streaming import run_available_now
 
 
-def _env_stream_shuffle() -> int:
-    raw = os.environ.get("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "4")
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            f"PG_TELEMETRY_SPARK_STREAM_SHUFFLE must be an integer, got {raw!r}"
-        ) from None
+#: Confs for every harness run; :func:`streaming.run_available_now`
+#: sets them, with the checkpoint file manager, for the run only and
+#: restores the host session's values afterwards.
+#:
+#: Width 4: stateful streaming creates one state store PER shuffle
+#: partition per operator; on a host session left at the 200-partition
+#: default, store init/commit dominates a local micro-batch run by ~6×
+#: (measured 35 s -> 6 s per query).  The partitioning is recorded in
+#: the checkpoint at first run, so every run of one harness uses it.
+#: At cluster scale state partitioning follows the cluster's shuffle
+#: sizing instead — this is local-harness ergonomics, not a scale
+#: setting.  Optimization r17's interleaved 8/4/2 sweep at sf0.01
+#: (``tools/sweep_stream_width.py`` at 53d81e8) measured 4 dominant —
+#: per-op mins w8→w4: str_stream_stream_join 7.8→5.0 s, str_watermark
+#: 4.4→3.2, str_topk_windowed 3.6→2.8, suite totals 41.9→35.2 s —
+#: while 2 was mixed (only the stream-stream join kept improving) and
+#: halves state parallelism for no suite-level gain.
+#:
+#: RocksDB (bundled rocksdbjni) is the scale story for stateful
+#: streaming — the default HDFS-backed provider holds every key in
+#: executor heap, so 100 TB of keyed state OOMs, while RocksDB spills
+#: state to local SSD with bounded memory (SURVEY §3 EP3).
+#:
+#: Results are independent of both (the batch equivalence tests pin
+#: them).
+STREAM_CONFS = {
+    "spark.sql.shuffle.partitions": "4",
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+}
 
 
 @dataclass
 class FileStreamHarness:
     spark: SparkSession
     schema: T.StructType
-    base_dir: str = field(default_factory=lambda: tempfile.mkdtemp(prefix="pgts_stream_"))
-    #: State-store parallelism for harness-driven runs.  Stateful
-    #: streaming creates one state store PER shuffle partition per
-    #: operator; on a host session left at the 200-partition default,
-    #: store init/commit dominates a local micro-batch run by ~6×
-    #: (measured 35 s -> 6 s per query).  The partitioning is recorded
-    #: in the checkpoint at first run, so it is applied consistently
-    #: for every run of this harness.  At cluster scale state
-    #: partitioning follows the cluster's shuffle sizing instead —
-    #: this knob is local-harness ergonomics, not a scale setting,
-    #: and is env-overridable (PG_TELEMETRY_SPARK_STREAM_SHUFFLE) so
-    #: width sweeps measure the shipped kernel.  Default 4
-    #: (optimization r17): the interleaved 8/4/2 sweep at sf0.01
-    #: measured 4 dominant — per-op mins w8→w4:
-    #: str_stream_stream_join 7.8→5.0 s, str_watermark 4.4→3.2,
-    #: str_topk_windowed 3.6→2.8, suite totals 41.9→35.2 s — while 2
-    #: was mixed (only the stream-stream join kept improving) and
-    #: halves state parallelism for no suite-level gain.  Results are
-    #: partition-count-independent (batch equivalence tests pin them).
-    shuffle_partitions: int = field(default_factory=_env_stream_shuffle)
-    #: State-store backend.  RocksDB (bundled rocksdbjni) is the scale
-    #: story for stateful streaming — the default HDFS-backed provider
-    #: holds every key in executor heap, so 100 TB of keyed state OOMs,
-    #: while RocksDB spills state to local SSD with bounded memory
-    #: (SURVEY §3 EP3).  Results are provider-independent (the batch
-    #: equivalence tests pin them); set to "" to fall back to the
-    #: session default provider.
-    state_store_provider: str = (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    _batch_no: int = 0
-
-    #: Class-level progress capture: every ``run_available`` appends
-    #: one summary dict per completed run ({query name, batch
-    #: durations, state rows/bytes totals from the last progress}).
-    #: tools/measure_streaming_scale.py drains this to report
-    #: state-store size + batch latency per operator at a given SF —
-    #: a list on the CLASS (ClassVar) so query functions need no API
-    #: change and dataclass treats it as shared state, not a field.
-    progress_log: ClassVar[list] = []
 
     def __enter__(self) -> FileStreamHarness:
+        self.base_dir = tempfile.mkdtemp(prefix="pgts_stream_")
         return self
 
     def __exit__(self, *exc) -> None:
         shutil.rmtree(self.base_dir, ignore_errors=True)
-
-    @property
-    def stream_confs(self) -> dict[str, str]:
-        """Shuffle/state partitioning and state-store provider for one
-        local micro-batch run.  :func:`streaming.run_available_now` sets
-        them, with the checkpoint file manager, for the run only and
-        restores the host session's values afterwards."""
-        confs = {"spark.sql.shuffle.partitions": str(self.shuffle_partitions)}
-        if self.state_store_provider:
-            confs["spark.sql.streaming.stateStore.providerClass"] = (
-                self.state_store_provider
-            )
-        return confs
 
     @property
     def landing(self) -> str:
@@ -116,7 +86,6 @@ class FileStreamHarness:
         """Land one micro-batch as a Parquet file."""
         Path(self.landing).mkdir(parents=True, exist_ok=True)
         df.coalesce(1).write.mode("append").parquet(self.landing)
-        self._batch_no += 1
 
     def stream(self) -> DataFrame:
         return self.spark.readStream.schema(self.schema).parquet(self.landing)
@@ -128,7 +97,7 @@ class FileStreamHarness:
         output_mode: str = "update",
     ) -> list[list]:
         """Run the stream to exhaustion (AvailableNow) against the
-        checkpoint ``name``, with :attr:`stream_confs` and the
+        checkpoint ``name``, with :data:`STREAM_CONFS` and the
         checkpoint's file manager (:func:`streaming.run_available_now`);
         return the rows captured from each micro-batch as lists of Row."""
         captured: list[list] = []
@@ -136,32 +105,7 @@ class FileStreamHarness:
         def capture(batch_df: DataFrame, batch_id: int) -> None:
             captured.append(batch_df.collect())
 
-        q = run_available_now(
-            transformed, capture, self.checkpoint(name), output_mode, self.stream_confs
+        run_available_now(
+            transformed, capture, self.checkpoint(name), output_mode, STREAM_CONFS
         )
-        self._log_progress(name, q)
         return captured
-
-    def _log_progress(self, name: str, q) -> None:
-        """Summarize the finished run's progress into progress_log."""
-        try:
-            progresses = [p for p in q.recentProgress if p]
-        except Exception:
-            return
-        batches = [
-            {
-                "batch_id": p.get("batchId"),
-                "duration_ms": p.get("batchDuration"),
-                "input_rows": p.get("numInputRows"),
-                "state_rows": sum(
-                    s.get("numRowsTotal", 0) for s in p.get("stateOperators", [])
-                ),
-                "state_bytes": sum(
-                    s.get("memoryUsedBytes", 0) for s in p.get("stateOperators", [])
-                ),
-            }
-            for p in progresses
-        ]
-        FileStreamHarness.progress_log.append(
-            {"name": name, "provider": self.state_store_provider, "batches": batches}
-        )

@@ -41,7 +41,7 @@ def test_small_regime_caps_and_disables_aqe(spark):
 
 
 def test_large_regime_leaves_session_conf_alone(spark):
-    ctx = loop_sizing(spark, 10_000_000, small_cap=5_000_000)
+    ctx = loop_sizing(spark, 10_000_000)
     assert isinstance(ctx, contextlib.nullcontext)
     with ctx:
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

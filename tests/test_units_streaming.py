@@ -13,7 +13,7 @@ from pg_telemetry_spark.queries.streaming_ops import (
     _day_batches,
     _stream_events,
 )
-from pg_telemetry_spark.streaming.harness import FileStreamHarness
+from pg_telemetry_spark.streaming.harness import STREAM_CONFS, FileStreamHarness
 
 
 def _mk_events(spark, rows):
@@ -286,9 +286,9 @@ def test_rocksdb_state_store_engages(spark):
     checkpoint must carry RocksDB artifacts, not just the conf."""
     from pathlib import Path
 
+    provider = STREAM_CONFS["spark.sql.streaming.stateStore.providerClass"]
+    assert "RocksDBStateStoreProvider" in provider
     with FileStreamHarness(spark, STREAM_SCHEMA) as h:
-        assert "RocksDBStateStoreProvider" in h.state_store_provider
-
         def agg(stream):
             return stream.groupBy("user_id").agg(F.count("*").alias("n"))
 
@@ -529,12 +529,22 @@ def test_sized_shard_count_rule():
     assert sized_shard_count(1_000_000_000) == 20_000
 
 
-def test_malformed_stream_shuffle_env_names_the_variable(spark, monkeypatch):
-    """A bad PG_TELEMETRY_SPARK_STREAM_SHUFFLE fails at harness
-    construction with an error that says which variable is wrong."""
-    monkeypatch.setenv("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "four")
-    with pytest.raises(ValueError, match="PG_TELEMETRY_SPARK_STREAM_SHUFFLE"):
-        FileStreamHarness(spark, STREAM_SCHEMA)
+def test_harness_makes_its_dir_on_enter(spark):
+    """Building a harness touches no disk; entering it makes its
+    ``pgts_stream_*`` dir and leaving it removes that dir."""
+    import glob
+    import os
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "pgts_stream_*")
+    before = set(glob.glob(pattern))
+    h = FileStreamHarness(spark, STREAM_SCHEMA)
+    assert set(glob.glob(pattern)) == before
+    with h:
+        assert os.path.isdir(h.base_dir)
+        assert set(glob.glob(pattern)) - before == {h.base_dir}
+    assert not os.path.exists(h.base_dir)
+    assert set(glob.glob(pattern)) - before == set()
 
 
 def test_streaming_ops_remove_their_harness_dirs(spark, sf_dir):

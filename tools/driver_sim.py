@@ -76,13 +76,6 @@ def vhash(cols, rows):
     return h.hexdigest()
 
 qs, osql = e.queries(), e.oracle_sql()
-# SPARK_GRAFT_SIM_ONLY: comma-separated name filter — used by
-# tools/sweep_topup.py to merge freshly-landed operators into an
-# existing decade archive without re-running the whole registry.
-_only = _os.environ.get("SPARK_GRAFT_SIM_ONLY")
-if _only:
-    keep = set(_only.split(","))
-    qs = {n: f for n, f in qs.items() if n in keep}
 ok = bad = 0
 t_start = time.perf_counter()
 timings = {}
@@ -132,9 +125,9 @@ print("wrote", OUT)
 # persist their per-op timings; each write compares against the
 # previously committed sidecar (normally last round's) and records any
 # op >3x slower AND >=1s now — bench.py lifts `regressions` into its
-# compact driver line.  Decade sweeps / filtered runs don't overwrite
-# the gate-scale record.
-if not _only and SF == "/root/testdata/sf0.01" and _MASTER == "local[8]":
+# compact driver line.  Decade sweeps don't overwrite the gate-scale
+# record.
+if "SPARK_GRAFT_SIM_SF" not in _os.environ and _MASTER == "local[8]":
     import os.path as _osp
 
     side = "/root/repo/SWEEP_TIMINGS.json"
