@@ -28,7 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from pg_telemetry_spark.operators.similarity import as_double, dot
-from pg_telemetry_spark.session import ckpt_eager
+from pg_telemetry_spark.session import iter_checkpoint
 
 
 #: Training-sample cap per centroid (FAISS's ``max_points_per_centroid``
@@ -674,7 +674,7 @@ def build_lsh_ann_index(
     # consumer in the cold plan (a localCheckpoint, not a cache pin,
     # so the plan-budget sweep's CacheManager nuke cannot resurrect
     # the triple computation)
-    hot = ckpt_eager(
+    hot = iter_checkpoint(
         codes.groupBy("tbl", "bucket")
         .agg(F.count("*").alias("width"))
         .filter(F.col("width") > hot_width)
@@ -798,14 +798,14 @@ def lsh_ann_compact(
     raised ``hot_width``; it then stays split (recall-neutral, probe
     cost marginally above a fresh rebuild's) until a full rebuild —
     splitting is the safe direction, un-splitting is rebuild-only."""
-    crossing = ckpt_eager(
+    crossing = iter_checkpoint(
         index.filter(F.col("sub") < 0)
         .groupBy("tbl", "bucket")
         .agg(F.count("*").alias("width"))
         .filter(F.col("width") > hot_width)
         .select("tbl", "bucket")
     )
-    overcap = ckpt_eager(
+    overcap = iter_checkpoint(
         index.filter(F.col("sub") >= 0)
         .groupBy("tbl", "bucket", "sub")
         .agg(F.count("*").alias("width"))

@@ -7,10 +7,13 @@ neighbors; fixpoint = components labeled by their minimum member.
 Each round is one equi-join + one hash aggregate — no driver-side
 graph, so it scales with the cluster.  Rounds needed = graph
 diameter; near-dup clusters are shallow (a dup of a dup of a dup),
-so 3–5 rounds close virtually all real corpora.  The loop
-materializes each round (persist + count) and unpersists the
-previous one, keeping lineage flat; on a real cluster swap the
-persist for checkpoint() against a fault-tolerant dir.
+so 3–5 rounds close virtually all real corpora.  Both variants run
+their rounds through :func:`pg_telemetry_spark.session.iterate`: each
+round's state is lazily checkpointed (lineage stays flat; set
+``PG_TELEMETRY_SPARK_CHECKPOINT_DIR`` for reliable checkpoints on a
+cluster), and one scalar witness aggregate per round both
+materializes the checkpoint and tests the fixpoint.  Each raises when
+``max_iter`` rounds reach no fixpoint.
 
 For adversarial long-chain graphs, the literature answer is
 large-star/small-star (Kiveris et al., "Connected Components in
@@ -26,7 +29,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from pg_telemetry_spark.session import ckpt_eager, ckpt_lazy
+from pg_telemetry_spark.session import (
+    default_parallelism,
+    iterate,
+    loop_shuffle_width,
+    sized_shuffle,
+)
 
 
 def connected_components(
@@ -38,14 +46,6 @@ def connected_components(
     """(id, comp) for every node in ``edges``; ``comp`` = min node id
     reachable from ``id``.  Deterministic; raises if ``max_iter``
     rounds don't reach the fixpoint."""
-    return _connected_components_impl(edges, id1, id2, max_iter)
-
-
-def _connected_components_impl(
-    edges: DataFrame, id1: str, id2: str, max_iter: int
-) -> DataFrame:
-    from pg_telemetry_spark.session import loop_sizing
-
     und = edges.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
     sym = und.unionByName(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -55,81 +55,52 @@ def _connected_components_impl(
     # round instead of two — same agg shape as a propagation round, so
     # it costs nothing extra.  The seed's input is the full edge
     # stream, so its width is the CLUSTER width (default_parallelism),
-    # not a loop constant (VERDICT r16 #1); AQE is off for this one
-    # bounded aggregation because the persist() pins the pre-coalesce
-    # plan anyway (canChangeCachedPlanOutputPartitioning=false) while
-    # each AQE query stage is an extra blocking job.
-    from pg_telemetry_spark.session import default_parallelism, sized_shuffle
-
+    # not a loop constant; AQE is off for this one bounded aggregation
+    # because the persist() pins the pre-coalesce plan anyway
+    # (canChangeCachedPlanOutputPartitioning=false) while each AQE
+    # query stage is an extra blocking job.
     with sized_shuffle(edges.sparkSession, default_parallelism(edges.sparkSession)):
-        labels = (
+        seed = (
             sym.groupBy("src")
             .agg(F.least(F.min("dst"), F.first("src")).alias("comp"))
             .select(F.col("src").alias("id"), "comp")
             .persist()
         )
-        row = labels.agg(
-            F.sum("comp").alias("s"), F.count("*").alias("n")
-        ).collect()[0]
+        row = seed.agg(F.sum("comp").alias("s"), F.count("*").alias("n")).first()
     # monotone convergence witness: sum of labels strictly decreases
     # until fixpoint (labels only ever shrink toward the component
-    # min).  The node count rides the same collect for free and sizes
-    # the loop's shuffle width (optimization r17): per-round state is
-    # O(nodes) labels, and dedup-shaped graphs have O(1) average
-    # degree (pairs come out of star-degraded buckets), so the node
-    # count is a faithful proxy for the per-round join volume.  AQE
-    # stays off only in this derived-width regime; a graph past the
-    # small cap runs the loop under the session conf unchanged
-    # (r16 measured the capped regime at 8: llm_dedup_cc 2.5-2.9 ->
-    # 1.0-1.2 s, llm_dedup_cc_star 6.2-7.2 -> 3.0-3.5 s, identical
-    # components).
-    prev_sum, n_nodes = row["s"], row["n"]
-    from pg_telemetry_spark.session import loop_shuffle_width
+    # min).  The node count rides the same action and sizes the loop:
+    # per-round state is O(nodes) labels, and dedup-shaped graphs have
+    # O(1) average degree, so the node count is a faithful proxy for
+    # the per-round join volume.
+    n_nodes = row["n"]
 
-    # The seed cache landed at cluster width; the loop reads it every
-    # round, so narrow the VIEW to the derived loop width (coalesce is
-    # block-merging, no shuffle, no job) — the cached blocks are
-    # released after round 1 via the seed handle.
-    seed = labels
-    labels = labels.coalesce(
-        loop_shuffle_width(edges.sparkSession, n_nodes)
-    )
-    with loop_sizing(edges.sparkSession, n_nodes):
-        return _cc_loop(sym, labels, seed, prev_sum, max_iter)
-
-
-def _cc_loop(
-    sym: DataFrame, labels: DataFrame, release: DataFrame, prev_sum, max_iter: int
-) -> DataFrame:
-    for _ in range(max_iter):
+    def step(labels: DataFrame, _: int) -> DataFrame:
         neigh = sym.join(labels, sym.dst == labels.id).groupBy("src").agg(
             F.min("comp").alias("nb_min")
         )
-        # localCheckpoint truncates the lineage so the result plan is
-        # one scan of the final labels, not iter-many stacked joins
-        # (on a cluster use checkpoint() against a fault-tolerant dir).
-        # Lazy (eager=False): the witness aggregate right below is the
-        # materializing action, so each round costs ONE job, not two.
-        new_labels = (
-            labels.join(neigh, labels.id == neigh.src, "left")
-            .select(
-                labels.id,
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nb_min"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .transform(ckpt_lazy)
+        return labels.join(neigh, labels.id == neigh.src, "left").select(
+            labels.id,
+            F.least(F.col("comp"), F.coalesce(F.col("nb_min"), F.col("comp"))).alias(
+                "comp"
+            ),
         )
-        cur_sum = new_labels.agg(F.sum("comp")).collect()[0][0]
-        # release the frame that BACKS the current labels view (the
-        # seed cache in round 1 — `labels` itself is its coalesced
-        # wrapper — the previous round's checkpoint afterwards)
-        release.unpersist()
-        release = labels = new_labels
-        if cur_sum == prev_sum:
-            return labels
-        prev_sum = cur_sum
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+
+    # The seed cache landed at cluster width; the loop reads it in
+    # round 1, so narrow the VIEW to the loop width (coalesce is
+    # block-merging, no shuffle, no job).
+    labels, settled = iterate(
+        seed.coalesce(loop_shuffle_width(edges.sparkSession, n_nodes)),
+        step,
+        n_nodes,
+        max_iter,
+        witness=[F.sum("comp")],
+        start=(row["s"],),
+    )
+    seed.unpersist()
+    if not settled:
+        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    return labels
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -188,20 +159,14 @@ def connected_components_star(
     At fixpoint every edge is (node, root), i.e. a star, which IS the
     label assignment.
     """
-    from pg_telemetry_spark.session import (
-        default_parallelism,
-        loop_sizing,
-        sized_shuffle,
-    )
-
     # The canonical edge build's input is the caller's full edge
-    # stream, so its width is the CLUSTER width, not a loop constant
-    # (VERDICT r16 #1); AQE off for this one bounded distinct because
-    # the persist() pins the pre-coalesce plan anyway while each AQE
-    # stage is an extra blocking job.  The measured distinct-edge
-    # count then derives the loop's shuffle width — same sizing rule
-    # as connected_components.
-    with sized_shuffle(edges.sparkSession, default_parallelism(edges.sparkSession)):
+    # stream, so its width is the CLUSTER width, not a loop constant;
+    # AQE off for this one bounded distinct because the persist() pins
+    # the pre-coalesce plan anyway while each AQE stage is an extra
+    # blocking job.  The measured distinct-edge count then sizes the
+    # loop — same rule as connected_components.
+    spark = edges.sparkSession
+    with sized_shuffle(spark, default_parallelism(spark)):
         und = (
             edges.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
             .filter(F.col("u") != F.col("v"))
@@ -209,65 +174,30 @@ def connected_components_star(
             .persist()
         )
         n_e = und.count()
-    from pg_telemetry_spark.session import loop_shuffle_width
-
-    width = loop_shuffle_width(edges.sparkSession, n_e)
-    with loop_sizing(edges.sparkSession, n_e):
-        return _connected_components_star_impl(und, width, max_iter)
-
-
-def _connected_components_star_impl(
-    und: DataFrame, width: int, max_iter: int
-) -> DataFrame:
-    nodes = (
-        und.select(F.col("u").alias("id"))
-        .unionByName(und.select(F.col("v").alias("id")))
-        .distinct()
-        .persist()
-    )
     # narrow the loop's view of the cluster-width edge cache to the
-    # derived loop width (block merge, no shuffle) — same move as
-    # connected_components' seed
-    und_view = und.coalesce(width)
-
-    def witness(e: DataFrame) -> tuple:
-        row = e.select(
-            F.greatest("u", "v").alias("a"), F.least("u", "v").alias("b")
-        ).agg(
-            F.count("*").alias("n"), F.expr("bit_xor(xxhash64(a, b))").alias("h")
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    cur = und_view
-    prev_w = None  # no baseline action: round 1 can't be a fixpoint match
-    for _ in range(max_iter):
-        # lazy checkpoint: the witness aggregate materializes it, so
-        # each alternation costs one job instead of two
-        nxt = _small_star(_large_star(cur)).transform(ckpt_lazy)
-        cur_w = witness(nxt)
-        if cur is not und_view:
-            cur.unpersist()
-        cur = nxt
-        if cur_w == prev_w:
-            break
-        prev_w = cur_w
-    else:
-        raise RuntimeError(f"connected_components_star: no fixpoint in {max_iter} rounds")
-
-    # At fixpoint edges are (member, root); roots appear only on the
-    # right.  Label members by their root, roots by themselves.
-    member_labels = cur.select(
-        F.greatest("u", "v").alias("id"), F.least("u", "v").alias("comp")
-    ).groupBy("id").agg(F.min("comp").alias("comp"))
-    # Materialize HERE (eager checkpoint) so the nodes-distinct,
-    # group-by, and label join all run under the iterative shuffle
-    # sizing — deferring them hands tiny frames to the caller's
-    # (possibly 200-partition) conf and the caller's collect pays it.
-    out = (
-        nodes.join(member_labels, "id", "left")
-        .select("id", F.coalesce("comp", F.col("id")).alias("comp"))
-        .transform(ckpt_eager)
+    # loop width (block merge, no shuffle) — same move as
+    # connected_components' seed.  No start witness: round 1 cannot
+    # be a fixpoint match.
+    star, settled = iterate(
+        und.coalesce(loop_shuffle_width(spark, n_e)),
+        lambda e, _: _small_star(_large_star(e)),
+        n_e,
+        max_iter,
+        witness=[
+            F.count("*"),
+            F.expr("bit_xor(xxhash64(greatest(u, v), least(u, v)))"),
+        ],
     )
     und.unpersist()
-    nodes.unpersist()
-    return out
+    if not settled:
+        raise RuntimeError(f"connected_components_star: no fixpoint in {max_iter} rounds")
+    # At fixpoint every edge is (member, root) with the root smallest:
+    # members take the root's label, roots their own.
+    labels = star.select(
+        F.greatest("u", "v").alias("id"), F.least("u", "v").alias("comp")
+    )
+    return (
+        labels.unionByName(labels.select(F.col("comp").alias("id"), "comp"))
+        .groupBy("id")
+        .agg(F.min("comp").alias("comp"))
+    )

@@ -17,7 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pg_telemetry_spark.session import ckpt_eager
+from pg_telemetry_spark.session import iter_checkpoint
 from pg_telemetry_spark.registry import query
 from pg_telemetry_spark.tables import load_table
 
@@ -908,9 +908,10 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     children = c.filter(~is_root).select(
         "node", F.floor(F.col("node") / 3).cast("long").alias("parent")
     )
+    # lazy checkpoints: each level's emptiness count materializes it
     frontier = c.filter(is_root).select(
         "node", F.col("node").alias("root"), F.lit(0).alias("depth")
-    ).transform(ckpt_eager)
+    ).transform(iter_checkpoint, eager=False)
     out = frontier
     while frontier.count() > 0:  # scalar emptiness check per level
         frontier = (
@@ -919,7 +920,7 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "parent",
             )
             .select("node", "root", (F.col("depth") + 1).alias("depth"))
-            .transform(ckpt_eager)
+            .transform(iter_checkpoint, eager=False)
         )
         out = out.unionByName(frontier)
     return out

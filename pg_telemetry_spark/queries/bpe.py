@@ -25,7 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pg_telemetry_spark.session import ckpt_lazy
+from pg_telemetry_spark.session import iter_checkpoint
 from pg_telemetry_spark.cache import pin
 from pg_telemetry_spark.registry import query
 from pg_telemetry_spark.tables import load_table
@@ -156,7 +156,9 @@ def _bpe_merge_loop(
             break
         a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
         merges.append((r, a, b, a + b, n))
-        vocab = vocab.select(_merge_fold(a, b).alias("syms"), "wn").transform(ckpt_lazy)
+        vocab = iter_checkpoint(
+            vocab.select(_merge_fold(a, b).alias("syms"), "wn"), eager=False
+        )
     return merges
 
 

@@ -24,6 +24,12 @@ Scale shapes, stated up front:
   driver never sees a row (uniform init, no dangling mass in an
   undirected co-purchase graph; convergence is fixed-k, not a
   collect-and-test loop).
+- The four iterative queries (PageRank, label propagation, k-core,
+  BFS) run their rounds through :func:`session.iterate`, which owns
+  the loop's shuffle sizing, the per-round lazy checkpoint and the
+  convergence witness.  Each round joins the edge list against a
+  per-vertex frame broadcast under :data:`session.LOOP_BROADCAST_CAP`,
+  so the edges are never re-exchanged.
 """
 
 from __future__ import annotations
@@ -31,7 +37,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pg_telemetry_spark.session import LOOP_BROADCAST_CAP, ckpt_lazy, loop_sizing
+from pg_telemetry_spark.session import (
+    LOOP_BROADCAST_CAP,
+    iter_checkpoint,
+    iterate,
+    loop_shuffle_width,
+)
 from pg_telemetry_spark.cache import pin
 from pg_telemetry_spark.registry import query
 from pg_telemetry_spark.tables import load_table
@@ -192,76 +203,45 @@ def wl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph; returns the top-20 parts by rank.
 
     Power iteration as pure DataFrame ops: symmetrize the ordered
-    edge list, precompute out-degrees ONCE (joined per round, not
-    recomputed), then each round is contributions = ranks/deg
-    exploded along edges, grouped by destination — ONE shuffle per
-    round on the vertex key.  Fixed k=8 keeps the loop free of
-    driver-side convergence collects (the same discipline as
-    llm_dedup_cc's bounded rounds); each round's ranks are
-    localCheckpointed to TRUNCATE lineage — persist alone leaves the
-    logical plan compounding until its explain string OOMs a default
-    driver (found by the plain-session driver sim, round 9); a real
-    cluster swaps in reliable checkpoints.  An undirected co-purchase
+    edge list, precompute out-degrees ONCE (pinned, joined per round),
+    then each round is contributions = ranks/deg exploded along edges,
+    grouped by destination — ONE shuffle per round on the vertex key.
+    Fixed k=8 keeps the loop free of driver-side convergence actions;
+    :func:`iterate` checkpoints each round's ranks to TRUNCATE lineage
+    (persist alone leaves the logical plan compounding until its
+    explain string OOMs a default driver).  An undirected co-purchase
     graph has no dangling vertices (every vertex has >= 1 edge), so
     the teleport term is the constant (1-d)/N.  Tier C: golden test
     pins the result against a local numpy power iteration
     (tests/test_units_graph.py); float rank sums are order-dependent
     so no SQL hash oracle."""
     e = copurchase_edges(_month_items(spark, sf_dir))
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    sym = pin(e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))))
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
     n_v = sym.select("u").distinct().count()
     d = 0.85
-    ranks = deg.select("u", F.lit(1.0 / n_v).alias("rank"))
-    edges_deg = sym.join(deg, "u").persist()
-    # Optimization r16: the per-round join ships the RANKS side as a
-    # broadcast (gated on the measured n_v, see LOOP_BROADCAST_CAP) so
-    # the persisted edge table is never re-exchanged — each round is
-    # then exactly ONE shuffle (the destination groupBy), and the
-    # shuffle itself is capped by sized_shuffle (per-round state is
-    # n_v rows; 200/32 near-empty partitions per round cost more in
-    # fixed per-partition work than the data).  Plan diff: the round
-    # join went SortMergeJoin(exchange, exchange) -> BroadcastHashJoin
-    # (plans/r16/wl_pagerank_{before,after}.txt).  Optimization r17
-    # (VERDICT r16 #1): the cap is DERIVED from the measured n_v and
-    # only applies in the broadcast-gated regime — past
-    # LOOP_BROADCAST_CAP the loop falls back to sort-merge rounds and
-    # runs under the session conf with AQE skew handling intact.
-    with loop_sizing(spark, n_v):
-        for _ in range(8):
-            contribs = (
-                edges_deg.join(_vertex_side(ranks, n_v), "u")
-                .select(
-                    F.col("v").alias("u"), (F.col("rank") / F.col("deg")).alias("c")
-                )
-                .groupBy("u")
-                .agg(F.sum("c").alias("inflow"))
-            )
-            new_ranks = contribs.select(
-                "u",
-                (F.lit((1.0 - d) / n_v) + F.lit(d) * F.col("inflow")).alias("rank"),
-            )
-            # localCheckpoint TRUNCATES the lineage (persist alone does
-            # not: the logical tree still compounds per round and its
-            # explain string alone OOMs a default driver by round 8); on
-            # a real cluster swap in reliable checkpointing to survive
-            # executor loss.  LAZY (optimization r17, guide §2.4): the
-            # next round's gated broadcast build (or the final collect)
-            # is the materializing action, so each round costs one job
-            # fewer than an eager checkpoint — same blocks, same
-            # truncation, measured identical ranks.
-            ranks = new_ranks.transform(ckpt_lazy)
-    out = (
+    edges_deg = pin(sym.join(deg, "u"))
+
+    # The ranks side of the round join is broadcast (gated on n_v), so
+    # the pinned edge table is never re-exchanged: each round is ONE
+    # shuffle, the destination groupBy.
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        contribs = (
+            edges_deg.join(_vertex_side(ranks, n_v), "u")
+            .select(F.col("v").alias("u"), (F.col("rank") / F.col("deg")).alias("c"))
+            .groupBy("u")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        return contribs.select(
+            "u", (F.lit((1.0 - d) / n_v) + F.lit(d) * F.col("inflow")).alias("rank")
+        )
+
+    ranks, _ = iterate(deg.select("u", F.lit(1.0 / n_v).alias("rank")), step, n_v, 8)
+    return (
         ranks.select(F.col("u").alias("part"), F.round("rank", 8).alias("rank"))
         .orderBy(F.desc("rank"), "part")
         .limit(20)
     )
-    rows = out.collect()  # small: detach from the persisted lineage
-    sym.unpersist()
-    edges_deg.unpersist()
-    return spark.createDataFrame(rows, out.schema)
 
 
 @query("wl_label_propagation", group="graph", tier="C")
@@ -273,45 +253,27 @@ def wl_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     label — fully deterministic, no random visit order).  Returns the
     20 largest communities.
 
-    Scale shape per round: one equi-join (edges x labels, vertex key),
-    one (vertex, label) count agg, one per-vertex argmax via unsorted
-    struct-max — three hash shuffles on uniform 8-byte keys, no
-    windows; labels are localCheckpointed per round (same lineage
-    discipline as wl_pagerank).  Tier C: golden replays the same
-    synchronous rounds in local python
+    Scale shape per round: one equi-join (edges x broadcast labels,
+    vertex key), one (vertex, label) count agg, one per-vertex argmax
+    via unsorted struct-max — hash shuffles on uniform 8-byte keys, no
+    windows; :func:`iterate` checkpoints the labels per round.  Tier
+    C: golden replays the same synchronous rounds in local python
     (tests/test_units_graph.py)."""
     e = copurchase_edges(_month_items(spark, sf_dir))
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    sym = pin(sym)
+    sym = pin(e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))))
     labels = sym.select("u").distinct().select("u", F.col("u").alias("label"))
-    # One bounded scalar (the vertex count) gates the per-round
-    # broadcast of the labels frame — same shape as wl_pagerank: the
-    # pinned edge list streams through a BroadcastHashJoin instead of
-    # being re-exchanged every round, and the two per-round
-    # aggregations shuffle under the derived loop sizing (r16/r17:
-    # width from the measured n_v, AQE-off only inside the
-    # broadcast-gated regime — see session.loop_sizing).
+    # the vertex count gates the per-round broadcast of the labels
     n_v = labels.count()
-    with loop_sizing(sym.sparkSession, n_v):
-        for _ in range(5):
-            nbr = sym.join(
-                _vertex_side(labels.select(F.col("u").alias("v"), "label"), n_v),
-                "v",
-            ).select("u", "label")
-            cnt = nbr.groupBy("u", "label").agg(F.count("*").alias("c"))
-            best = F.max(
-                F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-            ).alias("b")
-            labels = (
-                cnt.groupBy("u")
-                .agg(best)
-                .select("u", (-F.col("b.nl")).alias("label"))
-                # lazy: the next round's broadcast build (or the final
-                # groupBy) materializes it — one job per round saved
-                .transform(ckpt_lazy)
-            )
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        nbr = sym.join(
+            _vertex_side(labels.select(F.col("u").alias("v"), "label"), n_v), "v"
+        ).select("u", "label")
+        cnt = nbr.groupBy("u", "label").agg(F.count("*").alias("c"))
+        best = F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("b")
+        return cnt.groupBy("u").agg(best).select("u", (-F.col("b.nl")).alias("label"))
+
+    labels, _ = iterate(labels, step, n_v, 5)
     return (
         labels.groupBy("label")
         .agg(F.count("*").alias("n_members"), F.min("u").alias("min_part"))
@@ -327,57 +289,36 @@ def wl_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition step used for graph-noise pruning before community
     detection).  Returns one summary row: surviving vertex/edge
     counts, the max degree inside the core, and the smallest core
-    vertex.
+    vertex.  Raises when 30 peel rounds reach no fixpoint.
 
     Scale shape per round: degree = ONE count agg over the symmetric
-    edge list, survivor filter = ONE semi-join per endpoint on the
-    vertex key; the edge table shrinks monotonically so each round is
-    cheaper than the last.  The fixpoint test collects a single
-    (count) row per round — O(rounds) scalar collects, the same
-    bounded-driver-inventory class as the CC convergence checksum
-    (SCALE.md); edges are localCheckpointed per round to truncate
-    lineage.  Tier C: golden replays the peel in local python
+    edge list, survivor filter = ONE broadcast semi-join per endpoint
+    on the vertex key; the edge table shrinks monotonically so each
+    round is cheaper than the last.  The fixpoint witness is the
+    surviving edge count, one scalar per round (SCALE.md).  Tier C:
+    golden replays the peel in local python
     (tests/test_units_graph.py)."""
     k = 3
-    # build the edge list once and union its two orientations — the
-    # old shape called copurchase_edges(_month_items(...)) twice and
-    # re-ran the full month-join + pair fan-out + distinct pipeline
-    # for each side (optimization r16)
     e = pin(copurchase_edges(_month_items(spark, sf_dir)))
-    sym = (
-        e.select("u", "v")
-        .unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        # lazy: the count right below materializes it in the same job
-        .transform(ckpt_lazy)
+    sym = iter_checkpoint(
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),
+        eager=False,
     )
-    n_prev = sym.count()
-    # Survivor set <= vertex count <= n_prev (every vertex owns >= 1
-    # symmetric edge row) — broadcast both semi-joins under the same
-    # gate as wl_pagerank, so the (checkpointed) edge table is
-    # filtered in place instead of re-exchanged twice per peel round;
-    # the degree aggregation is the round's one shuffle (optimization
-    # r16).  r17: the gate bound is n_prev, not 2*n_prev — the old
-    # ~4x overestimate silently disabled the broadcast on mid-size
-    # graphs well before the documented 5M-vertex cap (ADVICE r16);
-    # the loop width is derived from the measured edge-row count and
-    # the cap is scoped to the broadcast regime (VERDICT r16 #1).
-    with loop_sizing(sym.sparkSession, n_prev):
-        for _ in range(30):
-            deg = sym.groupBy("u").agg(F.count("*").alias("d"))
-            keep = deg.filter(F.col("d") >= k).select("u")
-            keep = _vertex_side(keep, n_prev)
-            sym = (
-                sym.join(keep, "u", "left_semi")
-                .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-                # lazy: the convergence count below is the
-                # materializing action — one job per peel round, not two
-                .transform(ckpt_lazy)
-            )
-            n = sym.count()  # 1-row convergence scalar per round (bounded)
-            if n == n_prev:
-                break
-            n_prev = n
+    # materializes the checkpoint; the survivor set <= vertex count <=
+    # n_e (every vertex owns >= 1 symmetric edge row) bounds the
+    # broadcast gate and sizes the loop
+    n_e = sym.count()
+
+    def step(sym: DataFrame, _: int) -> DataFrame:
+        deg = sym.groupBy("u").agg(F.count("*").alias("d"))
+        keep = _vertex_side(deg.filter(F.col("d") >= k).select("u"), n_e)
+        return sym.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
+        )
+
+    sym, settled = iterate(sym, step, n_e, 30, witness=[F.count("*")], start=(n_e,))
+    if not settled:
+        raise RuntimeError("wl_kcore: no fixpoint in 30 peel rounds")
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     return deg.agg(
         F.count("*").alias("n_core_vertices"),
@@ -392,60 +333,45 @@ def wl_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-hop BFS reach from the highest-degree vertex (smallest
     id on ties — a deterministic hub source) of the one-month
     co-purchase graph: frontier expansion until exhaustion (bounded
-    at 10 hops), reporting vertices first reached at each hop — the
-    reachability primitive behind "within N degrees" graph features.
+    at 10 hops, the query's specification), reporting vertices first
+    reached at each hop — the reachability primitive behind "within N
+    degrees" graph features.
 
-    Scale shape per round: frontier x edges is ONE equi-join on the
-    vertex key; visited-set subtraction is a left-anti join; both
-    shrink as the frontier saturates.  The loop exits on an empty
-    frontier via a 1-row count collect per hop (bounded scalar
-    inventory, SCALE.md); visited is localCheckpointed per hop.  At
-    100 TB the same loop runs with the visited set bucketed on the
-    vertex key so both joins co-locate.  Tier C: golden replays the
-    BFS in local python (tests/test_units_graph.py)."""
+    The loop state is one ``(u, hop)`` visited frame.  Every neighbor
+    of a vertex reached before the last hop is already visited, so an
+    edge from a visited vertex to an unvisited one starts on the
+    frontier.  A hop keeps the edges whose far end v is unvisited
+    (anti-join) and whose near end u is visited (semi-join), then
+    distincts the far ends: one broadcast of visited serves both
+    joins, and the distinct is the hop's one shuffle.  The loop exits when a hop adds
+    no vertex (the visited count is the witness).  Tier C: golden
+    replays the BFS in local python (tests/test_units_graph.py)."""
     e = copurchase_edges(_month_items(spark, sf_dir))
-    sym = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
+    sym = pin(
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     )
-    sym = pin(sym)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
-    # Bounded scalar: the vertex count gates the per-hop broadcasts
-    # (frontier and visited are both <= n_v rows) so the pinned edge
-    # table streams through BroadcastHashJoins each hop instead of
-    # being re-exchanged; the frontier distinct is the hop's one
-    # shuffle, sized from the measured n_v (r16/r17, see
-    # session.loop_sizing).
+    # the vertex count gates the per-hop broadcast of visited
     n_v = deg.count()
-    src = (
-        deg.agg(F.max(F.struct(F.col("d"), (-F.col("u")).alias("nu"))).alias("b"))
-        .select((-F.col("b.nu")).alias("u"))
-    )
-    visited = src.select("u", F.lit(0).alias("hop")).transform(ckpt_lazy)
-    frontier = visited.select("u")
-    with loop_sizing(sym.sparkSession, n_v):
-        for hop in range(1, 11):
-            nxt = (
-                sym.join(_vertex_side(frontier, n_v), "u", "left_semi")
-                .select(F.col("v").alias("u"))
-                .distinct()
-                .join(_vertex_side(visited.select("u"), n_v), "u", "left_anti")
-            )
-            # lazy: the exhaustion count below materializes it — one
-            # job per hop instead of two (optimization r17, guide §2.4)
-            nxt = nxt.transform(ckpt_lazy)
-            if nxt.count() == 0:  # 1-row scalar per hop (bounded)
-                break
-            # no checkpoint on the visited union (optimization r16):
-            # every nxt IS already checkpointed, so visited is a
-            # union of <= hops RDD-backed frames — no recompute risk,
-            # lineage depth bounded by the hop cap, and dropping the
-            # per-hop eager materialization saves one blocking job
-            # per hop
-            visited = visited.unionByName(
-                nxt.select("u", F.lit(hop).alias("hop"))
-            )
-            frontier = nxt
+    width = loop_shuffle_width(spark, n_v)
+    src = deg.agg(
+        F.max(F.struct(F.col("d"), (-F.col("u")).alias("nu"))).alias("b")
+    ).select((-F.col("b.nu")).alias("u"), F.lit(0).alias("hop"))
+
+    def step(visited: DataFrame, i: int) -> DataFrame:
+        seen = _vertex_side(visited.select("u"), n_v)
+        nxt = (
+            sym.join(seen, sym["v"] == seen["u"], "left_anti")
+            .join(seen, "u", "left_semi")
+            .select(F.col("v").alias("u"))
+            .distinct()
+        )
+        # coalesce (no shuffle): the union alone would add ``width``
+        # partitions, and a task per partition, to the state every hop
+        hop = nxt.select("u", F.lit(i + 1).alias("hop"))
+        return visited.unionByName(hop).coalesce(width)
+
+    visited, _ = iterate(src, step, n_v, 10, witness=[F.count("*")])
     return (
         visited.groupBy("hop")
         .agg(F.count("*").alias("n_vertices"), F.min("u").alias("min_part"))

@@ -688,9 +688,9 @@ def llm_ann_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delta coding; measured 41 jobs per run at sf0.1 for a 4-row
     # answer.  In the warehouse posture this materialization is the
     # index table itself (Parquet), exactly like _ann_base_index.
-    from pg_telemetry_spark.session import ckpt_eager
+    from pg_telemetry_spark.session import iter_checkpoint
 
-    appended = ckpt_eager(
+    appended = iter_checkpoint(
         base_idx.unionByName(
             lsh_ann_index_delta(delta, planes, ref_planes, hot0)
         )

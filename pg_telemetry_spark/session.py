@@ -12,6 +12,11 @@ This module owns session configuration:
   streaming harness): set for one block, restored on exit.
 - :func:`checkpoint_confs` — the streaming checkpoint file manager a
   checkpoint path should run with.
+- :func:`iterate` — the one round loop of the iterative operators
+  (the graph queries, connected components): each round runs under
+  :func:`loop_sizing`, cuts its lineage with a lazy
+  :func:`iter_checkpoint`, and tests convergence with one aggregate
+  that also materializes the checkpoint.
 
 Required confs and why:
 
@@ -266,7 +271,7 @@ LOOP_ROWS_PER_PARTITION = 250_000
 #: :func:`loop_sizing`'s small regime (optimization r16, guide
 #: §3.1/§2.4).  Each round of PageRank / label propagation /
 #: BFS / k-core joins the (persisted) edge list against a per-VERTEX
-#: frame (ranks, labels, frontier, survivor set).  As a shuffle join
+#: frame (ranks, labels, visited set, survivor set).  As a shuffle join
 #: that re-exchanges the edge list every round — measured at sf0.1:
 #: wl_pagerank ran 46 jobs / 679 tasks for 8 rounds, most of them
 #: exchange-materialization stages over an unchanged edge table.
@@ -410,9 +415,8 @@ def sized_shuffle(spark: SparkSession, partitions: int):
 
 
 def iter_checkpoint(df, eager: bool = True):
-    """Lineage truncation for iterative operators (PageRank rounds,
-    label propagation, BFS frontiers, BPE merges, CC star rounds,
-    k-means centroids).
+    """Lineage truncation for iterative operators (:func:`iterate`'s
+    rounds, BPE merges) and for small multi-consumer frames.
 
     Default: ``localCheckpoint`` — fast, blocks live on executors.
     That is the right local/bench trade, but those blocks are
@@ -452,15 +456,34 @@ def iter_checkpoint(df, eager: bool = True):
     return df.checkpoint(eager=False)
 
 
-def ckpt_eager(df):
-    """`df.transform(ckpt_eager)` — chain-preserving iter_checkpoint."""
-    return iter_checkpoint(df, eager=True)
+def iterate(state, step, n_rows: int, max_rounds: int, witness=None, start=None):
+    """Run a bounded iterative loop and return ``(state, settled)``.
 
+    Each round sets ``state = step(state, i)`` (``i`` counts rounds
+    from 0) under :func:`loop_sizing` for ``n_rows``, and a lazy
+    :func:`iter_checkpoint` cuts the new state's lineage.
 
-def ckpt_lazy(df):
-    """`df.transform(ckpt_lazy)` — lazy variant (materialized by the
-    caller's next action, one job instead of two)."""
-    return iter_checkpoint(df, eager=False)
+    - Without ``witness``, exactly ``max_rounds`` rounds run and
+      ``settled`` is False.  The next round's broadcast build (or the
+      caller's action) materializes each checkpoint.
+    - With ``witness`` aggregate columns, the round's one action is
+      ``state.agg(*witness).first()``, which also materializes the
+      checkpoint.  The loop stops at the first round whose witness
+      equals the previous round's, with ``settled`` True; ``start`` is
+      the witness before round 0, so the first round can settle.
+      ``settled`` is False when no round repeats within ``max_rounds``.
+    """
+    prev = start
+    with loop_sizing(state.sparkSession, n_rows):
+        for i in range(max_rounds):
+            state = iter_checkpoint(step(state, i), eager=False)
+            if witness is None:
+                continue
+            cur = tuple(state.agg(*witness).first())
+            if cur == prev:
+                return state, True
+            prev = cur
+    return state, False
 
 
 def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:

@@ -126,16 +126,10 @@ def test_no_bare_persist_in_query_sources():
     every persist through ``cache.pin`` (released by the registry
     hook) or the session memo (``session.memo``, cleared by
     ``clear_session_state``) — a persist is lawful only inside a
-    ``memo(...)`` call.  The one whitelisted file is graph_ops.py's
-    pagerank persist→collect→unpersist pair, balanced within its
-    eager build (praised shape — releases storage immediately, r12
-    verdict)."""
-    allowed = {"graph_ops.py"}
+    ``memo(...)`` call.  No file is exempt."""
     qdir = Path(__file__).resolve().parent.parent / "pg_telemetry_spark" / "queries"
     offenders = []
     for p in sorted(qdir.glob("*.py")):
-        if p.name in allowed:
-            continue
         src = p.read_text()
         offenders += [f"{p.name}:{i}" for i in _persists_outside_memo(src)]
         # .cache() is persist() by another name: any file using it

@@ -3,13 +3,15 @@
 No test runs most of the tools, so renaming or deleting an engine name
 would break them silently.  This parses each script and resolves every
 ``from pg_telemetry_spark... import name`` against the package, without
-running the script.
+running the script.  It also checks that no tool names an absolute
+checkout path.
 """
 
 from __future__ import annotations
 
 import ast
 import importlib
+import re
 from pathlib import Path
 
 TOOLS = Path(__file__).resolve().parent.parent / "tools"
@@ -57,3 +59,38 @@ def test_tool_imports_resolve():
         if not _resolves(module, name)
     ]
     assert not unresolved, f"tool imports that no longer resolve: {unresolved}"
+
+
+def _checkout_paths(src: str) -> list[str]:
+    """Absolute paths in ``src`` that lie inside an engine checkout: a
+    directory holding ``pg_telemetry_spark/session.py`` is the path or
+    one of its parents.  Fixture paths outside any checkout pass."""
+    found = []
+    for token in re.findall(r"(?<![\w.)\]])/[\w.-]+(?:/[\w.-]+)*", src):
+        path = Path(token)
+        if any(
+            (p / "pg_telemetry_spark" / "session.py").is_file()
+            for p in (path, *path.parents)
+        ):
+            found.append(token)
+    return found
+
+
+def test_checkout_path_detector():
+    repo = TOOLS.parent
+    src = f'sys.path.insert(0, "{repo}")\nOUT = "{repo}/X.json"\nx = n/16\n'
+    assert _checkout_paths(src) == [str(repo), f"{repo}/X.json"]
+    assert _checkout_paths('SF = "/no/such/fixtures/sf0.01"\n') == []
+
+
+def test_tools_name_no_checkout_path():
+    """A tool that hard-codes a checkout path imports and grades that
+    checkout's engine when run from any other one; tools derive the
+    root from ``__file__``."""
+    offenders = [
+        f"{p.name}: {path}"
+        for p in sorted(TOOLS.iterdir())
+        if p.suffix in (".py", ".sh")
+        for path in _checkout_paths(p.read_text())
+    ]
+    assert not offenders, f"tools naming an absolute checkout path: {offenders}"

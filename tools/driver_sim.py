@@ -8,11 +8,13 @@ CORRECTNESS_LOCAL.json in the repo root.
 """
 import sys, hashlib, json, time, traceback, datetime as dt
 from decimal import Decimal
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 import duckdb
 from pyspark.sql import SparkSession
 
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/CORRECTNESS_LOCAL.json"
+OUT = sys.argv[1] if len(sys.argv) > 1 else str(REPO / "CORRECTNESS_LOCAL.json")
 
 # plain session, as the driver would build it (no engine confs!).
 # SPARK_GRAFT_SIM_DRIVER_MEM exists ONLY for the decade-up sweeps
@@ -130,7 +132,7 @@ print("wrote", OUT)
 if "SPARK_GRAFT_SIM_SF" not in _os.environ and _MASTER == "local[8]":
     import os.path as _osp
 
-    side = "/root/repo/SWEEP_TIMINGS.json"
+    side = str(REPO / "SWEEP_TIMINGS.json")
     prev, prev_steady = {}, {}
     if _osp.exists(side):
         try:

@@ -3,7 +3,7 @@ sf0.1) so the 100-TB scaling claims get a measured two-point curve
 instead of design prose (VERDICT r6 #1).
 
 The driver fixtures (``/root/testdata/sf*``) are read-only, so the
-ladder lands under the repo: ``/root/repo/scaledata/sf1`` (gitignored
+ladder lands under the repo: ``scaledata/sf1`` (gitignored
 — the generator is the artifact, the parquet is reproducible).
 Deterministic: numpy PCG64 seeded per-table, so every run writes
 byte-stable logical content.

@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -27,12 +29,12 @@ from pg_telemetry_spark.registry import all_queries  # noqa: E402
 from pg_telemetry_spark.session import get_session  # noqa: E402
 from pg_telemetry_spark.tables import load_table  # noqa: E402
 
-OUT = "/root/repo/ANN_RECALL.json"
+OUT = str(REPO / "ANN_RECALL.json")
 
 DEFAULT_SCALES = [
     "/root/testdata/sf0.1",
-    "/root/repo/scaledata/sf1",
-    "/root/repo/scaledata/sf10",
+    str(REPO / "scaledata" / "sf1"),
+    str(REPO / "scaledata" / "sf10"),
 ]
 
 

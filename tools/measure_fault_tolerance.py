@@ -23,8 +23,9 @@ import subprocess
 import sys
 import threading
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 QUERY = sys.argv[1] if len(sys.argv) > 1 else "wl_q9_product_profit"
 SF = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"

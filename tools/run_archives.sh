@@ -16,12 +16,12 @@ LC='local-cluster[2,4,4096]'
 python tools/driver_sim.py CORRECTNESS_LOCAL.json
 SPARK_GRAFT_SIM_SF=/root/testdata/sf0.1 SPARK_GRAFT_SIM_DRIVER_MEM=8g \
   python tools/driver_sim.py "CORRECTNESS_LOCAL_SF01_r${R}.json"
-SPARK_GRAFT_SIM_SF=/root/repo/scaledata/sf1 SPARK_GRAFT_SIM_DRIVER_MEM=16g \
+SPARK_GRAFT_SIM_SF=scaledata/sf1 SPARK_GRAFT_SIM_DRIVER_MEM=16g \
   python tools/driver_sim.py "CORRECTNESS_LOCAL_SF1_r${R}.json"
 SPARK_GRAFT_SIM_MASTER="$LC" \
   python tools/driver_sim.py "CORRECTNESS_LOCALCLUSTER_r${R}.json"
 SPARK_GRAFT_SIM_MASTER="$LC" SPARK_GRAFT_SIM_SF=/root/testdata/sf0.1 SPARK_GRAFT_SIM_DRIVER_MEM=8g \
   python tools/driver_sim.py "CORRECTNESS_LOCALCLUSTER_SF01_r${R}.json"
-SPARK_GRAFT_SIM_MASTER="$LC" SPARK_GRAFT_SIM_SF=/root/repo/scaledata/sf1 SPARK_GRAFT_SIM_DRIVER_MEM=16g \
+SPARK_GRAFT_SIM_MASTER="$LC" SPARK_GRAFT_SIM_SF=scaledata/sf1 SPARK_GRAFT_SIM_DRIVER_MEM=16g \
   python tools/driver_sim.py "CORRECTNESS_LOCALCLUSTER_SF1_r${R}.json"
 echo "ARCHIVES_DONE r${R}"
