@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pg_telemetry_spark.operators.asof import asof_join
 from pg_telemetry_spark.queries.relational import EVENTS_V
 from pg_telemetry_spark.registry import query
+from pg_telemetry_spark.session import local_frame
 from pg_telemetry_spark.tables import load_table
 
 
@@ -197,8 +198,8 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 manifest.append(
                     (part, fn, os.path.getsize(os.path.join(root, fn)))
                 )
-    mdf = spark.createDataFrame(
-        manifest, "partition string, file string, bytes bigint"
+    mdf = local_frame(
+        spark, manifest, "partition string, file string, bytes bigint"
     )
 
     def plan(key, pdf):

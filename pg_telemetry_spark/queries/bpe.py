@@ -25,7 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pg_telemetry_spark.session import iter_checkpoint
+from pg_telemetry_spark.session import iter_checkpoint, local_frame
 from pg_telemetry_spark.cache import pin
 from pg_telemetry_spark.registry import query
 from pg_telemetry_spark.tables import load_table
@@ -171,8 +171,8 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_tierc_coverage.py."""
     d = load_table(spark, sf_dir, "documents")
     rows = bpe_train(d, n_merges=8)
-    return spark.createDataFrame(
-        rows, schema="rank BIGINT, sym_a STRING, sym_b STRING, merged STRING, n BIGINT"
+    return local_frame(
+        spark, rows, "rank BIGINT, sym_a STRING, sym_b STRING, merged STRING, n BIGINT"
     )
 
 

@@ -25,7 +25,7 @@ from pg_telemetry_spark.queries.llm import (
     _near_dup_pairs,
 )
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import default_parallelism, memo
+from pg_telemetry_spark.session import default_parallelism, local_frame, memo
 from pg_telemetry_spark.tables import load_table
 
 
@@ -606,8 +606,8 @@ def _ann_base_index(spark: SparkSession, sf_dir: str):
             "index": index.hint("rebalance"),
             "hot": hot.hint("rebalance"),
             "vectors": corpus.select("vec_id", "embedding").hint("rebalance"),
-            "meta": spark.createDataFrame(
-                [(nbits, tables)], "nbits int, tables int"
+            "meta": local_frame(
+                spark, [(nbits, tables)], "nbits int, tables int"
             ),
             # the arriving batch is itself a landed table, not a derivation
             "delta": emb.filter(F.col("vec_id") < 10)
@@ -769,7 +769,8 @@ def llm_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (geometry, n, float(sk), method, nbits, tables, exp_recall, exp_frac)
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "geometry string, n long, s_k double, method string, nbits int, "
         "tables int, exp_recall double, exp_frac double",

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pg_telemetry_spark.queries.detsum import DSUM_SQL, dsum
 from pg_telemetry_spark.cache import pin
 from pg_telemetry_spark.registry import query
+from pg_telemetry_spark.session import local_frame
 from pg_telemetry_spark.tables import load_table
 
 #: feature-hash width for both operators (2 md5 hex digits)
@@ -371,8 +372,8 @@ def llm_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked.append((rank, best[1], best[0]))
         chosen.append(best[1])
         remaining.discard(best[1])
-    return spark.createDataFrame(
-        picked, "rank int, doc_id bigint, score double"
+    return local_frame(
+        spark, picked, "rank int, doc_id bigint, score double"
     )
 
 

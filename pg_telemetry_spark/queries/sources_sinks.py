@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pg_telemetry_spark.registry import query
+from pg_telemetry_spark.session import local_frame
 from pg_telemetry_spark.sources.jdbc_pg import source_descriptor
 from pg_telemetry_spark.tables import SCHEMAS, load_table
 from pg_telemetry_spark.warehouse.layout import (
@@ -302,8 +303,8 @@ def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         df.unpersist()  # counts above materialized everything we need
-    return spark.createDataFrame(
-        rows, "disposition string, n_rows bigint, score_sum bigint"
+    return local_frame(
+        spark, rows, "disposition string, n_rows bigint, score_sum bigint"
     )
 
 
@@ -360,6 +361,6 @@ def snk_manifest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("s"),
         ).collect()[0]
         out.append((m["version"], row["n"], float(round(row["s"], 6))))
-    return spark.createDataFrame(
-        out, "version int, n_rows long, sum_value double"
+    return local_frame(
+        spark, out, "version int, n_rows long, sum_value double"
     )

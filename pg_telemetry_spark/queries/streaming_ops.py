@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pg_telemetry_spark.registry import query
+from pg_telemetry_spark.session import local_frame
 from pg_telemetry_spark.streaming import run_available_now
 from pg_telemetry_spark.streaming.harness import STREAM_CONFS, FileStreamHarness
 from pg_telemetry_spark.tables import load_table
@@ -38,33 +39,6 @@ STREAM_SCHEMA = T.StructType(
 )
 
 _COLS = [f.name for f in STREAM_SCHEMA.fields]
-
-
-def _local_frame(
-    spark: SparkSession, rows: list, schema: T.StructType | str
-) -> DataFrame:
-    """``rows`` (tuples or Rows) as a DataFrame built from an Arrow
-    table.  It plans as a ``LocalTableScan``, so reading it fires no
-    job, where a list-built frame is RDD-backed and collecting it runs
-    one task per core through Python workers.  Values go through the
-    field type's ``toInternal`` as on the list path, so a naive
-    collected datetime keeps its instant under any host time zone."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    arrays = [
-        pa.array(
-            [f.dataType.toInternal(v) for v in col] if f.needConversion() else col,
-            type=arrow_field.type,
-        )
-        for f, arrow_field, col in zip(schema.fields, arrow_schema, columns)
-    ]
-    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,7 +76,7 @@ def src_stream_file(spark: SparkSession, sf_dir: str) -> DataFrame:
             h.add_batch(b)
             captured = h.run_available(h.stream(), "src", output_mode="append")
             rows.append((i, sum(len(c) for c in captured)))
-    return _local_frame(spark, rows, "batch int, n_rows bigint")
+    return local_frame(spark, rows, "batch int, n_rows bigint")
 
 
 @query("str_watermark", group="streaming", tier="C")
@@ -130,7 +104,7 @@ def str_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             for captured in h.run_available(agg(h.stream()), "wm", output_mode="update"):
                 for r in captured:
                     state[r.bucket] = r.n_events
-    return _local_frame(spark, sorted(state.items()), "bucket timestamp, n_events bigint")
+    return local_frame(spark, sorted(state.items()), "bucket timestamp, n_events bigint")
 
 
 @query("str_dedup", group="streaming", tier="C")
@@ -148,7 +122,7 @@ def str_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 h.stream().dropDuplicates(["event_id"]), "dedup", output_mode="append"
             ):
                 emitted.extend(captured)
-    out = _local_frame(spark, emitted, STREAM_SCHEMA)
+    out = local_frame(spark, emitted, STREAM_SCHEMA)
     return out.groupBy("event_type").agg(
         F.count("*").alias("n_events"), F.countDistinct("event_id").alias("n_unique")
     )
@@ -290,7 +264,7 @@ def str_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             for captured in h.run_available(transformed, "stateful", output_mode="update"):
                 for r in captured:
                     final[r.user_id] = (r.n_events, r.sum_value)
-    return _local_frame(
+    return local_frame(
         spark, [(u, n, s) for u, (n, s) in sorted(final.items())], _STATEFUL_OUT_SCHEMA
     )
 
@@ -311,7 +285,7 @@ def str_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched = h.stream().join(F.broadcast(cohorts), "user_id")
         captured = h.run_available(enriched, "static", output_mode="append")
     rows = [r for c in captured for r in c]
-    out = _local_frame(
+    out = local_frame(
         spark, [(r.cohort, r.event_id) for r in rows], "cohort string, event_id bigint"
     )
     return out.groupBy("cohort").agg(F.count("*").alias("n_events"))
@@ -345,7 +319,7 @@ def str_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
                     emitted += len(captured)
                     windows.update(r.bucket for r in captured)
         rows.append((mode, n_runs, emitted, len(windows)))
-    return _local_frame(
+    return local_frame(
         spark,
         rows,
         "mode string, batches int, rows_emitted bigint, distinct_windows bigint",
@@ -425,7 +399,7 @@ def str_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the click harness's checkpoint namespace
             for captured in clicks_h.run_available(joined, "ssjoin", output_mode="append"):
                 matched.extend(captured)
-    out = _local_frame(
+    out = local_frame(
         spark,
         [(r.user_id, r.click_id, r.buy_id) for r in matched],
         "user_id bigint, click_id bigint, buy_id bigint",
@@ -475,7 +449,7 @@ def str_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             h.add_batch(b)
             for captured in h.run_available(agg(h.stream()), "sess", output_mode="append"):
                 emitted.extend(captured)
-    out = _local_frame(
+    out = local_frame(
         spark,
         emitted,
         "user_id bigint, session_start timestamp, session_end timestamp, "
@@ -516,7 +490,7 @@ def str_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             for captured in h.run_available(agg(h.stream()), "slide", output_mode="update"):
                 for r in captured:
                     state[r.bucket] = (r.n_events, r.sum_value)
-    return _local_frame(
+    return local_frame(
         spark,
         [(k, *v) for k, v in sorted(state.items())],
         "bucket timestamp, n_events bigint, sum_value double",
@@ -553,7 +527,7 @@ def str_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             for captured in h.run_available(agg(h.stream()), "topk", output_mode="update"):
                 for r in captured:
                     state[(r.bucket, r.event_type)] = r.n
-    final = _local_frame(
+    final = local_frame(
         spark,
         [(k[0], k[1], v) for k, v in sorted(state.items())],
         "bucket timestamp, event_type string, n bigint",
@@ -628,7 +602,7 @@ def str_anomaly_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (et, b, ratio) for (b, et), ratio in sorted(alerts.items(), key=lambda kv: (kv[0][1], kv[0][0]))
     ]
-    out = _local_frame(
+    out = local_frame(
         spark,
         rows or [("__none__", None, 0.0)],
         "event_type string, bucket timestamp, ratio double",

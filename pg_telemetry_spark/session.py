@@ -17,6 +17,8 @@ This module owns session configuration:
   :func:`loop_sizing`, cuts its lineage with a lazy
   :func:`iter_checkpoint`, and tests convergence with one aggregate
   that also materializes the checkpoint.
+- :func:`local_frame` — a driver-side result (a list of rows) as a
+  DataFrame built from Arrow, so reading it starts no task.
 
 Required confs and why:
 
@@ -51,7 +53,8 @@ import math
 import os
 from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: Runtime-settable confs applied to any session the engine uses.
 RUNTIME_CONFS: dict[str, str] = {
@@ -484,6 +487,33 @@ def iterate(state, step, n_rows: int, max_rounds: int, witness=None, start=None)
                 return state, True
             prev = cur
     return state, False
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """``rows`` (tuples or Rows) as a DataFrame built from an Arrow
+    table.  It plans as a ``LocalTableScan``, so reading it fires no
+    job, where a list-built frame is RDD-backed and collecting it runs
+    one task per core through Python workers.  Values go through the
+    field type's ``toInternal`` as on the list path, so a naive
+    collected datetime keeps its instant under any host time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in col] if f.needConversion() else col,
+            type=arrow_field.type,
+        )
+        for f, arrow_field, col in zip(schema.fields, arrow_schema, columns)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:

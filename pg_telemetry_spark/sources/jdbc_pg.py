@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pg_telemetry_spark.session import local_frame
+
 #: The stat views a collector snapshots each tick, with the numeric
 #: column used for partitioned JDBC reads where one exists.
 STAT_VIEWS: dict[str, str | None] = {
@@ -65,6 +67,6 @@ def source_descriptor(spark: SparkSession) -> DataFrame:
         (view, part_col, part_col is not None, 8 if part_col else 1)
         for view, part_col in sorted(STAT_VIEWS.items())
     ]
-    return spark.createDataFrame(
-        rows, "view string, partition_column string, partitioned boolean, num_partitions int"
+    return local_frame(
+        spark, rows, "view string, partition_column string, partitioned boolean, num_partitions int"
     )
