@@ -30,7 +30,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from pg_telemetry_spark.session import (
-    default_parallelism,
     iterate,
     loop_shuffle_width,
     sized_shuffle,
@@ -54,12 +53,13 @@ def connected_components(
     # dup graphs (pairs/triangles) then converge in ONE confirming
     # round instead of two — same agg shape as a propagation round, so
     # it costs nothing extra.  The seed's input is the full edge
-    # stream, so its width is the CLUSTER width (default_parallelism),
+    # stream, so its width is the CLUSTER width (defaultParallelism),
     # not a loop constant; AQE is off for this one bounded aggregation
     # because the persist() pins the pre-coalesce plan anyway
     # (canChangeCachedPlanOutputPartitioning=false) while each AQE
     # query stage is an extra blocking job.
-    with sized_shuffle(edges.sparkSession, default_parallelism(edges.sparkSession)):
+    spark = edges.sparkSession
+    with sized_shuffle(spark, spark.sparkContext.defaultParallelism):
         seed = (
             sym.groupBy("src")
             .agg(F.least(F.min("dst"), F.first("src")).alias("comp"))
@@ -90,7 +90,7 @@ def connected_components(
     # round 1, so narrow the VIEW to the loop width (coalesce is
     # block-merging, no shuffle, no job).
     labels, settled = iterate(
-        seed.coalesce(loop_shuffle_width(edges.sparkSession, n_nodes)),
+        seed.coalesce(loop_shuffle_width(spark, n_nodes)),
         step,
         n_nodes,
         max_iter,
@@ -166,7 +166,7 @@ def connected_components_star(
     # blocking job.  The measured distinct-edge count then sizes the
     # loop — same rule as connected_components.
     spark = edges.sparkSession
-    with sized_shuffle(spark, default_parallelism(spark)):
+    with sized_shuffle(spark, spark.sparkContext.defaultParallelism):
         und = (
             edges.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
             .filter(F.col("u") != F.col("v"))

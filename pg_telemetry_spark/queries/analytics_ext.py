@@ -17,7 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pg_telemetry_spark.session import iter_checkpoint
+from pg_telemetry_spark.session import iter_checkpoint, scratch_dir
 from pg_telemetry_spark.registry import query
 from pg_telemetry_spark.tables import load_table
 
@@ -669,14 +669,12 @@ def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans parallelize per file with pushed path filters; payload bytes
     stay opaque binary until a mapInPandas decode (operators/
     multimodal.py)."""
-    import tempfile
-
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 40)
         .select("doc_id", "text")
     )
-    out_dir = tempfile.mkdtemp(prefix="pgts_binfiles_")
+    out_dir = scratch_dir("pgts_binfiles_")
 
     def land(rows) -> None:
         # executor-side landing (local FS here, shared FS on a

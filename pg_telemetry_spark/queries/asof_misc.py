@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pg_telemetry_spark.operators.asof import asof_join
 from pg_telemetry_spark.queries.relational import EVENTS_V
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import local_frame
+from pg_telemetry_spark.session import local_frame, scratch_dir
 from pg_telemetry_spark.tables import load_table
 
 
@@ -176,13 +176,12 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= target unless it is a single oversize file, bin count matches
     the local FFD replay, no file lost or duplicated."""
     import os
-    import tempfile
 
     import pandas as pd
 
     target = 4 * 1024 * 1024
     e = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="pgts_compact_")
+    out = scratch_dir("pgts_compact_")
     (
         e.withColumn("day", F.to_date("ts"))
         .repartition(8, "event_id")  # deliberate fragmentation

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pg_telemetry_spark.operators.minhash import near_duplicates
 from pg_telemetry_spark.operators.similarity import as_double, brute_force_topk, dot
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import default_parallelism, memo
+from pg_telemetry_spark.session import memo
 from pg_telemetry_spark.tables import load_table
 
 #: Deterministic duplicate injection: every 7th doc re-appears with a
@@ -70,7 +70,7 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # branches' 2 tasks.  Shuffling the raw text once (~MBs) before
         # the persist parallelizes the whole dedup family; a
         # many-split warehouse scan wouldn't need it.
-        return d.unionByName(mutated).repartition(default_parallelism(spark))
+        return d.unionByName(mutated).repartition(spark.sparkContext.defaultParallelism)
 
     return memo(spark, ("near_dup_corpus", sf_dir), lambda: build().persist())
 

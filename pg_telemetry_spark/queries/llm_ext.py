@@ -25,7 +25,7 @@ from pg_telemetry_spark.queries.llm import (
     _near_dup_pairs,
 )
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import default_parallelism, local_frame, memo
+from pg_telemetry_spark.session import local_frame, memo, scratch_dir
 from pg_telemetry_spark.tables import load_table
 
 
@@ -70,7 +70,7 @@ def llm_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         # core; shuffling the tiny raw text first costs ~nothing and
         # parallelizes the expensive leg.  At warehouse scale the scan
         # is already many-split and AQE elides the extra exchange.
-        return d.repartition(default_parallelism(spark)).select(
+        return d.repartition(spark.sparkContext.defaultParallelism).select(
             "doc_id",
             "lang",
             F.explode(
@@ -443,28 +443,18 @@ def _disk_index(spark: SparkSession, kind: str, sf_dir: str, build) -> tuple:
     order of ``build()``'s ``{table name: DataFrame}``.
 
     The first call per process writes every table of ``build()`` as
-    Parquet under ``.cache/<kind>_idx`` (removed at exit).  The frames
-    read the tables back with their WRITE-TIME schemas — exact by
-    construction, and no footer inference (measured ~87 ms per
-    ``spark.read.parquet``, x9 reads per probe build) — and are
-    memoized per session: plan reuse only, every probe still scans
+    Parquet under a scratch dir (:func:`session.scratch_dir`, removed
+    at exit).  The frames read the tables back with their WRITE-TIME
+    schemas — exact by construction, and no footer inference (measured
+    ~87 ms per ``spark.read.parquet``, x9 reads per probe build) — and
+    are memoized per session: plan reuse only, every probe still scans
     disk."""
-    import atexit
     import hashlib
     import os
-    import shutil
-    import tempfile
 
     if (kind, sf_dir) not in _DISK_INDEXES:
         token = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            ".cache",
-            f"{kind}_idx",
-        )
-        os.makedirs(root, exist_ok=True)
-        base_dir = tempfile.mkdtemp(prefix=f"{token}_pid{os.getpid()}_", dir=root)
-        atexit.register(shutil.rmtree, base_dir, ignore_errors=True)
+        base_dir = scratch_dir(f"{kind}_idx_{token}_")
         schemas = {}
         for name, df in build().items():
             df.write.mode("overwrite").parquet(os.path.join(base_dir, name))

@@ -7,13 +7,11 @@ seam, and the partitioned warehouse writer.
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import local_frame
+from pg_telemetry_spark.session import local_frame, scratch_dir
 from pg_telemetry_spark.sources.jdbc_pg import source_descriptor
 from pg_telemetry_spark.tables import SCHEMAS, load_table
 from pg_telemetry_spark.warehouse.layout import (
@@ -63,7 +61,7 @@ def src_csv_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Secondary-format ingest parity: fixtures round-trip through CSV
     (nation) and JSON lines (region) with explicit schemas, then join
     — the result must be indistinguishable from the Parquet path."""
-    tmp = tempfile.mkdtemp(prefix="pgts_fmt_")
+    tmp = scratch_dir("pgts_fmt_")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     nation.write.mode("overwrite").option("header", True).csv(f"{tmp}/nation_csv")
@@ -90,7 +88,7 @@ def snk_parquet_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     write, read back -> per-day row counts (must equal source).  The
     partition column enables static + dynamic pruning (asserted by the
     plan-shape tests)."""
-    tmp = tempfile.mkdtemp(prefix="pgts_wh_")
+    tmp = scratch_dir("pgts_wh_")
     events = load_table(spark, sf_dir, "events")
     write_events_warehouse(events, f"{tmp}/events")
     back = read_events_warehouse(spark, f"{tmp}/events")
@@ -115,7 +113,7 @@ def src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back with explicit schema, aggregated.  Must be
     indistinguishable from the Parquet path; predicate/column pushdown
     works on ORC scans the same way (plan-shape test)."""
-    tmp = tempfile.mkdtemp(prefix="pgts_orc_")
+    tmp = scratch_dir("pgts_orc_")
     supplier = load_table(spark, sf_dir, "supplier")
     supplier.write.mode("overwrite").orc(f"{tmp}/supplier_orc")
     s2 = spark.read.schema(SCHEMAS["supplier"]).orc(f"{tmp}/supplier_orc")
@@ -185,9 +183,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite history to add a column; you merge schemas at read and
     prune per-file).  The oracle models the same union-with-missing-
     column semantics."""
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="pgts_evo_")
+    tmp = scratch_dir("pgts_evo_")
     n = load_table(spark, sf_dir, "nation")
     old = n.filter(F.col("n_nationkey") < 10).select("n_nationkey", "n_regionkey")
     new = n.filter(F.col("n_nationkey") >= 10).select(
@@ -236,9 +232,7 @@ def snk_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the table back; exactly region 2 must carry v2 rows.  At
     100 TB this is how every late-arriving day is repaired without
     touching its neighbors."""
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="pgts_dyn_")
+    tmp = scratch_dir("pgts_dyn_")
     path = f"{tmp}/nations"
     n = load_table(spark, sf_dir, "nation")
     v1 = n.select("n_nationkey", "n_regionkey", F.lit("v1").alias("src"))
@@ -274,9 +268,7 @@ def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DROPMALFORMED).  Returns per-disposition counts plus the parsed
     sum so the good-row path is value-checked; tier C because the
     corrupt-row capture itself has no SQL-oracle equivalent."""
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="pgts_csv_")
+    tmp = scratch_dir("pgts_csv_")
     path = f"{tmp}/raw.csv"
     with open(path, "w") as f:
         f.write("id,name,score\n")
@@ -332,7 +324,7 @@ def snk_manifest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     file lists from whichever manifest version they opened."""
     import json as _json
 
-    tmp = tempfile.mkdtemp(prefix="pgts_snap_")
+    tmp = scratch_dir("pgts_snap_")
     events = load_table(spark, sf_dir, "events").select("event_id", "value")
     split0 = events.filter(F.pmod("event_id", F.lit(2)) == 0)
     split1 = events.filter(F.pmod("event_id", F.lit(2)) == 1)

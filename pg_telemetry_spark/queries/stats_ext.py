@@ -747,9 +747,7 @@ def ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-robin respread of the tiny series buys full-width
     # parallelism for the quadratic stage at the cost of shuffling a
     # few thousand rows.
-    from pg_telemetry_spark.session import default_parallelism
-
-    a = a.repartition(default_parallelism(spark))
+    a = a.repartition(spark.sparkContext.defaultParallelism)
     # No broadcast HINT on the b side (optimization r17, ADVICE r16):
     # the hint was unconditional, so a wide event_type x hour series
     # would be force-broadcast past the driver.  AQE's runtime join

@@ -14,14 +14,12 @@ boundaries, which no single oracle SQL statement models.
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pg_telemetry_spark.registry import query
-from pg_telemetry_spark.session import local_frame
+from pg_telemetry_spark.session import local_frame, scratch_dir
 from pg_telemetry_spark.streaming import run_available_now
 from pg_telemetry_spark.streaming.harness import STREAM_CONFS, FileStreamHarness
 from pg_telemetry_spark.tables import load_table
@@ -336,7 +334,7 @@ def snk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns per-type counts read back from the sink."""
     events = _stream_events(spark, sf_dir)
     day1, day2 = _day_batches(events, ["2024-01-01", "2024-01-02"])
-    sink_dir = tempfile.mkdtemp(prefix="pgts_sink_")
+    sink_dir = scratch_dir("pgts_sink_")
 
     def write_warehouse(batch_df: DataFrame, batch_id: int) -> None:
         # overwrite-by-batchId = exactly-once under replays

@@ -19,6 +19,9 @@ This module owns session configuration:
   that also materializes the checkpoint.
 - :func:`local_frame` — a driver-side result (a list of rows) as a
   DataFrame built from Arrow, so reading it starts no task.
+- :func:`scratch_dir` — every directory the engine writes files into
+  (query round-trips, streaming checkpoints, disk indexes, the shipped
+  package zip), under one root per process that is removed at exit.
 
 Required confs and why:
 
@@ -48,9 +51,12 @@ them in its deployment, see SCALE.md):
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import math
 import os
+import shutil
+import tempfile
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -135,8 +141,7 @@ _STATE: SessionState | None = None
 
 def session_state(spark: SparkSession) -> SessionState:
     """The state of ``spark``, made fresh when ``spark`` is not the
-    session the slot was made for (Python identity — no py4j call, and
-    the same on classic and Spark Connect sessions)."""
+    session the slot was made for (Python identity — no py4j call)."""
     global _STATE
     if _STATE is None or _STATE.spark is not spark:
         _STATE = SessionState(spark)
@@ -169,6 +174,30 @@ def clear_session_state() -> None:
     _STATE.frames.clear()
 
 
+#: This process's scratch root, made by the first :func:`scratch_dir`.
+_SCRATCH_ROOT: str | None = None
+
+
+def _scratch_root() -> str:
+    """The process's scratch root: made on first use under the temp dir
+    as it stands then (``TMPDIR``), and removed when the interpreter
+    exits.  Process-lifetime, not session-lifetime: a result frame reads
+    its files lazily, and the disk indexes outlive a revived session."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix=f"pgts_{os.getpid()}_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return _SCRATCH_ROOT
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory named ``prefix…`` under the process's scratch
+    root.  Every directory the engine writes files into comes from here.
+    The root is a driver-local path: on a multi-host cluster, executors
+    write into their own host's copy of it (see SCALE.md)."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
 def ship_package(spark: SparkSession) -> None:
     """Ship the engine source to executor Python workers (called once
     per session, by :func:`prepare_session`).
@@ -187,34 +216,27 @@ def ship_package(spark: SparkSession) -> None:
 
     The fix is the standard cluster deployment move, owned by the
     ENGINE so any session it prepares is cluster-ready: zip the
-    package once per process and ``addPyFile`` it, which distributes
-    the archive to every current AND future executor and prepends it
-    to the Python worker path.  On YARN/K8s the same zip rides the
-    identical API; Spark Connect sessions (no sparkContext) ship via
-    ``addArtifacts`` instead and are left alone here.
+    package once per process, under the process's scratch root, and
+    ``addPyFile`` it, which distributes the archive to every current
+    AND future executor and prepends it to the Python worker path.
+    On YARN/K8s the same zip rides the identical API.
     """
-    try:
-        master = spark.sparkContext.master
-    except Exception:
-        return  # Spark Connect — no classic sparkContext
-    if master.startswith("local["):
+    if spark.sparkContext.master.startswith("local["):
         return
-    import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "pg_telemetry_spark_pkg.zip")
-    tmp = f"{zpath}.{os.getpid()}"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in sorted(files):
-                if not fn.endswith(".py"):
+    zpath = os.path.join(_scratch_root(), "pg_telemetry_spark_pkg.zip")
+    if not os.path.exists(zpath):
+        with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
+            for root, _dirs, files in os.walk(pkg_dir):
+                if "__pycache__" in root:
                     continue
-                full = os.path.join(root, fn)
-                z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
-    os.replace(tmp, zpath)
+                for fn in sorted(files):
+                    if not fn.endswith(".py"):
+                        continue
+                    full = os.path.join(root, fn)
+                    z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
     spark.sparkContext.addPyFile(zpath)
 
 
@@ -245,22 +267,6 @@ def prepare_session(spark: SparkSession) -> SparkSession:
             pass
     state.prepared = True
     return spark
-
-
-def default_parallelism(spark: SparkSession) -> int:
-    """Cluster-width hint for explicit repartition spreads.
-
-    ``sparkContext.defaultParallelism`` on classic sessions; on Spark
-    Connect (no ``sparkContext``) the shuffle-partition conf is the
-    closest runtime-readable stand-in.
-    """
-    try:
-        return spark.sparkContext.defaultParallelism
-    except Exception:
-        try:
-            return int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            return 200
 
 
 #: Loop width floor: the measured local optimum at fixture scale,
@@ -299,11 +305,11 @@ def loop_shuffle_width(spark: SparkSession, n_rows: int) -> int:
     Every iterative operator already counts its state (vertices,
     edges, labels) before the loop — this turns that count into the
     loop's shuffle width: ``clamp(ceil(n_rows /
-    LOOP_ROWS_PER_PARTITION), LOOP_WIDTH_FLOOR, default_parallelism)``.
+    LOOP_ROWS_PER_PARTITION), LOOP_WIDTH_FLOOR, defaultParallelism)``.
     The ceiling is the cluster width, so a big graph's per-round
     aggregation can use every core instead of serializing on a
     local-mode constant."""
-    hi = max(default_parallelism(spark), LOOP_WIDTH_FLOOR)
+    hi = max(spark.sparkContext.defaultParallelism, LOOP_WIDTH_FLOOR)
     want = max(
         LOOP_WIDTH_FLOOR, math.ceil(max(int(n_rows), 1) / LOOP_ROWS_PER_PARTITION)
     )
@@ -372,12 +378,8 @@ def checkpoint_confs(spark: SparkSession, path: str) -> dict[str, str]:
     Decided from strings alone — no filesystem is instantiated."""
     scheme = urlparse(path).scheme
     if not scheme:
-        try:
-            hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
-            default_fs = hadoop_conf.get("fs.defaultFS", "file:///")
-        except Exception:
-            return {}  # Spark Connect: the server's filesystem is unknown
-        scheme = urlparse(default_fs).scheme
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = urlparse(hadoop_conf.get("fs.defaultFS", "file:///")).scheme
     if scheme != "file":
         return {}
     return {

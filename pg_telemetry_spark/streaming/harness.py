@@ -7,9 +7,10 @@ time; each ``run_available`` call starts the stream with
 newly-landed files are processed — exactly the restart-and-catch-up
 semantics of a production collector, compressed into a test.
 
-The harness is a context manager: entering it makes ``base_dir``,
-which holds its landing files and checkpoints, and leaving it deletes
-that directory.  A harness that is never entered touches no disk.
+The harness is a context manager: entering it makes ``base_dir``
+(a :func:`session.scratch_dir`), which holds its landing files and
+checkpoints, and leaving it deletes that directory.  A harness that is
+never entered touches no disk.
 
 Output is captured through ``foreachBatch`` (driver-side in local
 mode), which is also the engine's warehouse-sink seam: in production
@@ -20,13 +21,13 @@ the capture function is replaced by ``batch_df.write.format("jdbc")``
 from __future__ import annotations
 
 import shutil
-import tempfile
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pg_telemetry_spark.session import scratch_dir
 from pg_telemetry_spark.streaming import run_available_now
 
 
@@ -69,7 +70,7 @@ class FileStreamHarness:
     schema: T.StructType
 
     def __enter__(self) -> FileStreamHarness:
-        self.base_dir = tempfile.mkdtemp(prefix="pgts_stream_")
+        self.base_dir = scratch_dir("pgts_stream_")
         return self
 
     def __exit__(self, *exc) -> None:

@@ -36,7 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pg_telemetry_spark.session import default_parallelism, memo, prepare_session
+from pg_telemetry_spark.session import memo, prepare_session
 
 TABLE_NAMES = (
     "region",
@@ -217,13 +217,13 @@ def _cache_rebalance_width(spark: SparkSession, path: str) -> int:
     Spark job): one partition per ~64 MB of parquet, floored at the
     measured local optimum (8; the r16 width sweep showed 8 dominates
     both the CPU-heavy kernels and the sub-second consumers at fixture
-    scale) and clamped to ``default_parallelism`` so a narrow session
+    scale) and clamped to ``defaultParallelism`` so a narrow session
     (e.g. local[2]) is never over-partitioned.  Non-posix paths (the
     fixture cache is local-disk only) fall back to the floor."""
     nbytes = sum(_data_file_sizes(path))
     per_partition = 64 * 1024 * 1024
     return min(
-        default_parallelism(spark), max(8, -(-nbytes // per_partition))
+        spark.sparkContext.defaultParallelism, max(8, -(-nbytes // per_partition))
     )
 
 
@@ -258,7 +258,7 @@ def respread_if_narrow(df: DataFrame, path: str) -> DataFrame:
     sizes = _data_file_sizes(path)
     if not sizes:
         return df
-    target = default_parallelism(df.sparkSession)
+    target = df.sparkSession.sparkContext.defaultParallelism
     splits = sum(max(1, -(-size // _SPLIT_BYTES)) for size in sizes)
     return df.repartition(target) if splits < target else df
 

@@ -8,8 +8,6 @@ TABLE feeds row/size statistics to the cost-based optimizer.
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 import pyspark.sql.functions as F
@@ -18,9 +16,9 @@ from pg_telemetry_spark.tables import load_table
 
 
 @pytest.fixture(scope="module")
-def warehouse(spark, sf_dir):
+def warehouse(spark, sf_dir, tmp_path_factory):
     """orders + lineitem saved as tables bucketed by the join key."""
-    tmp = tempfile.mkdtemp(prefix="pgts_buck_")
+    tmp = tmp_path_factory.mktemp("buck")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS buck LOCATION '{tmp}'")
     (
         load_table(spark, sf_dir, "orders")

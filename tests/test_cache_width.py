@@ -39,13 +39,11 @@ def _cache_on(monkeypatch):
 
 def test_cache_width_is_size_derived(spark, sf_dir, _cache_on):
     """The rebalance width is floor-8 at fixture scale (sub-MB files)
-    and grows with on-disk bytes up to default_parallelism — never the
-    r16 constant ``min(default_parallelism, 8)`` that squeezed a
+    and grows with on-disk bytes up to defaultParallelism — never the
+    r16 constant ``min(defaultParallelism, 8)`` that squeezed a
     warehouse-scale table into 8 cached partitions (ADVICE r16 #2)."""
     w = _cache_rebalance_width(spark, f"{sf_dir}/documents.parquet")
-    from pg_telemetry_spark.session import default_parallelism
-
-    dp = default_parallelism(spark)
+    dp = spark.sparkContext.defaultParallelism
     assert w == min(dp, 8)  # fixture file is far below 8 x 64 MB
     # a synthetic big table derives a wider cache
     import unittest.mock as mock
@@ -99,9 +97,7 @@ def test_respread_decision_from_file_stat(spark, sf_dir, tmp_path):
     many files is left alone."""
     import pyarrow.parquet as pq
 
-    from pg_telemetry_spark.session import default_parallelism
-
-    dp = default_parallelism(spark)
+    dp = spark.sparkContext.defaultParallelism
     one = f"{sf_dir}/events.parquet"
     many = tmp_path / "events_dir"
     many.mkdir()

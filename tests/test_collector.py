@@ -3,8 +3,6 @@ warehouse -> query surface, with replay idempotence and retention."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 
 from pg_telemetry_spark.collector import COLLECT_SCHEMA, TelemetryCollector
@@ -12,8 +10,8 @@ from pg_telemetry_spark.queries.streaming_ops import _day_batches, _stream_event
 from pg_telemetry_spark.warehouse.layout import drop_partitions_older_than
 
 
-def test_collector_end_to_end(spark, sf_dir):
-    base = tempfile.mkdtemp(prefix="pgts_collector_")
+def test_collector_end_to_end(spark, sf_dir, tmp_path):
+    base = str(tmp_path)
     events = _stream_events(spark, sf_dir)
     day1, day2, day3 = _day_batches(
         events, ["2024-01-01", "2024-01-02", "2024-01-03"]
@@ -91,7 +89,9 @@ import pytest
     _view_cases(),
     ids=[c[0] for c in _view_cases()],
 )
-def test_stat_view_collector_end_to_end(spark, sf_dir, view, derive, keys, counters):
+def test_stat_view_collector_end_to_end(
+    spark, sf_dir, tmp_path, view, derive, keys, counters
+):
     """Typed stat-view landing -> raw + cross-batch increase()
     rollup, parameterized over EVERY cumulative view (VERDICT r10 #6:
     pg_stat_bgwriter's empty-key global series and pg_stat_database's
@@ -103,12 +103,11 @@ def test_stat_view_collector_end_to_end(spark, sf_dir, view, derive, keys, count
     committed — the crash window) reproduces byte-identical rollup
     output instead of advancing state twice."""
     import pathlib
-    import tempfile
 
     from pg_telemetry_spark.collector import StatViewCollector, counter_increases
     from pg_telemetry_spark.tables import load_table
 
-    base = tempfile.mkdtemp(prefix=f"pgts_statview_{view}_")
+    base = str(tmp_path)
     snaps = derive(load_table(spark, sf_dir, "events")).persist()
     days = sorted(
         r[0].isoformat()
@@ -180,7 +179,7 @@ def test_stat_view_collector_end_to_end(spark, sf_dir, view, derive, keys, count
     "view",
     ["pg_stat_statements", "pg_stat_bgwriter", "pg_stat_wal"],
 )
-def test_crash_between_sink_and_checkpoint_commit(spark, sf_dir, view):
+def test_crash_between_sink_and_checkpoint_commit(spark, sf_dir, tmp_path, view):
     """REAL crash-window replay through the streaming engine (VERDICT
     r11 #7): the synthetic redelivery test above re-invokes _ship by
     hand; this one kills the QUERY in the window between foreachBatch
@@ -198,7 +197,6 @@ def test_crash_between_sink_and_checkpoint_commit(spark, sf_dir, view):
     (statements), global empty-key (bgwriter), and the wrapping
     counter (wal — the reset rule inside a replayed batch)."""
     import pathlib
-    import tempfile
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -212,7 +210,7 @@ def test_crash_between_sink_and_checkpoint_commit(spark, sf_dir, view):
 
     keys, counters = CUMULATIVE_VIEWS[view]
     derive = statviews.DERIVATIONS[view]
-    base = tempfile.mkdtemp(prefix=f"pgts_crashwin_{view}_")
+    base = str(tmp_path)
     snaps = derive(load_table(spark, sf_dir, "events")).persist()
     days = sorted(
         r[0].isoformat()

@@ -2,7 +2,7 @@
 ``iterate`` round helper.
 
 The iterative loops' shuffle width is clamp(ceil(n/250k), 8,
-default_parallelism) — the floor is the measured local optimum, the
+defaultParallelism) — the floor is the measured local optimum, the
 ceiling the cluster width.  These pins keep the derivation honest: a
 future edit that reintroduces a constant cap (or breaks the clamps)
 fails here by name, and the large-graph regime must leave the session
@@ -18,7 +18,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from pg_telemetry_spark.session import (
-    default_parallelism,
     iterate,
     loop_shuffle_width,
     loop_sizing,
@@ -32,7 +31,7 @@ def test_width_floor_at_fixture_scale(spark):
 
 
 def test_width_grows_with_state(spark):
-    dp = default_parallelism(spark)
+    dp = spark.sparkContext.defaultParallelism
     assert loop_shuffle_width(spark, 10_000_000) == min(40, max(dp, 8))
     # ceiling: never past the cluster width
     assert loop_shuffle_width(spark, 10**12) == max(dp, 8)

@@ -10,8 +10,6 @@ non-equi time joins (the banded rewrites exist precisely to avoid it).
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 
 from pg_telemetry_spark.registry import all_queries
@@ -97,8 +95,8 @@ def test_whole_stage_codegen_covers_agg(spark, sf_dir):
     assert "* HashAggregate" in plan, "aggregate not inside whole-stage codegen"
 
 
-def test_partition_pruning_on_warehouse_layout(spark, sf_dir):
-    tmp = tempfile.mkdtemp(prefix="pgts_prune_")
+def test_partition_pruning_on_warehouse_layout(spark, sf_dir, tmp_path):
+    tmp = str(tmp_path)
     events = load_table(spark, sf_dir, "events")
     write_events_warehouse(events, f"{tmp}/events")
     back = spark.read.parquet(f"{tmp}/events")
@@ -110,7 +108,7 @@ def test_partition_pruning_on_warehouse_layout(spark, sf_dir):
     assert sliced.select(F.countDistinct("event_date")).head()[0] == 1
 
 
-def test_dynamic_partition_pruning_on_date_dim_join(spark, sf_dir, monkeypatch):
+def test_dynamic_partition_pruning_on_date_dim_join(spark, sf_dir, tmp_path, monkeypatch):
     """DPP end-to-end (SURVEY §4.1's "biggest tsdb win"): when the
     partition filter is only knowable at RUNTIME — a join against a
     date dimension filtered on an attribute, not on the date — the
@@ -120,7 +118,7 @@ def test_dynamic_partition_pruning_on_date_dim_join(spark, sf_dir, monkeypatch):
     between reading 8 weekend partitions and reading everything."""
     import datetime as dt
 
-    tmp = tempfile.mkdtemp(prefix="pgts_dpp_")
+    tmp = str(tmp_path)
     from pg_telemetry_spark.session import clear_session_state
 
     monkeypatch.setenv("PG_TELEMETRY_SPARK_NO_TABLE_CACHE", "1")

@@ -172,6 +172,35 @@ def test_conf_changes_only_in_session_module():
     assert not offenders, f"conf set/unset outside session.py: {offenders}"
 
 
+def _tempfile_uses(src: str) -> list[int]:
+    """Lines that import or name the ``tempfile`` module."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(src))
+        if (
+            isinstance(node, ast.Import)
+            and any(alias.name == "tempfile" for alias in node.names)
+        )
+        or (isinstance(node, ast.ImportFrom) and node.module == "tempfile")
+        or (isinstance(node, ast.Name) and node.id == "tempfile")
+    ]
+
+
+def test_tempfile_only_in_session_module():
+    """``session.scratch_dir`` makes every directory the engine writes
+    into, under the one process root that is removed at exit.  A
+    ``tempfile`` use anywhere else in the package is a dir that lives
+    outside that root and outlives the run."""
+    pkg = Path(__file__).resolve().parent.parent / "pg_telemetry_spark"
+    offenders = [
+        f"{p.relative_to(pkg)}:{line}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "session.py"
+        for line in _tempfile_uses(p.read_text())
+    ]
+    assert not offenders, f"tempfile outside session.py: {offenders}"
+
+
 def _stream_starts(src: str) -> list[int]:
     """Lines of ``.writeStream`` attributes and ``.trigger(...)`` calls."""
     return [

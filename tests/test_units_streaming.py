@@ -83,15 +83,13 @@ def test_stateful_counts_match_batch_groupby(spark, sf_dir):
     assert final == expected
 
 
-def test_foreachbatch_sink_idempotent_on_replay(spark, sf_dir):
+def test_foreachbatch_sink_idempotent_on_replay(spark, sf_dir, tmp_path):
     """Re-running an already-committed batch (same checkpoint) must not
     duplicate sink rows — the exactly-once contract of the
     batchId-keyed writer."""
-    import tempfile
-
     events = _stream_events(spark, sf_dir)
     (day1,) = _day_batches(events, ["2024-01-01"])
-    sink = tempfile.mkdtemp(prefix="pgts_idem_")
+    sink = str(tmp_path)
     with FileStreamHarness(spark, STREAM_SCHEMA) as h:
         h.add_batch(day1)
 
@@ -531,12 +529,14 @@ def test_sized_shard_count_rule():
 
 def test_harness_makes_its_dir_on_enter(spark):
     """Building a harness touches no disk; entering it makes its
-    ``pgts_stream_*`` dir and leaving it removes that dir."""
+    ``pgts_stream_*`` dir under the scratch root and leaving it removes
+    that dir."""
     import glob
     import os
-    import tempfile
 
-    pattern = os.path.join(tempfile.gettempdir(), "pgts_stream_*")
+    from pg_telemetry_spark.session import _scratch_root
+
+    pattern = os.path.join(_scratch_root(), "pgts_stream_*")
     before = set(glob.glob(pattern))
     h = FileStreamHarness(spark, STREAM_SCHEMA)
     assert set(glob.glob(pattern)) == before
@@ -554,15 +554,15 @@ def test_streaming_ops_remove_their_harness_dirs(spark, sf_dir):
     still readable afterwards."""
     import glob
     import os
-    import tempfile
     from pathlib import Path
 
     from pg_telemetry_spark.queries.streaming_ops import (
         src_stream_file,
         str_watermark,
     )
+    from pg_telemetry_spark.session import _scratch_root
 
-    pattern = os.path.join(tempfile.gettempdir(), "pgts_stream_*")
+    pattern = os.path.join(_scratch_root(), "pgts_stream_*")
     before = set(glob.glob(pattern))
     sf = str(Path(sf_dir).with_name("sf0.001"))
     assert str_watermark(spark, sf).count() > 0
